@@ -144,7 +144,7 @@ def _det_cfg(algorithm: str = "mcod", n_total: int = 0) -> DetectorConfig:
 # Per-(session, sf, algorithm) detection memo: outliers / stats /
 # detector_recall are projections of ONE detection run, and the driver
 # executes all queries in one session — without this each projection
-# recomputes the full counts pipeline. The per_point verdict table (tiny:
+# recomputes the full detection kernel. The per_point verdict table (tiny:
 # one row per point) is persisted; every projection reads it.
 _DETECTIONS: dict = {}
 

@@ -1,12 +1,16 @@
 """Top-level detector API: algorithm dispatch (the reference's CLI surface).
 
 Maps the reference's four algorithms (/root/reference/src/Executor.java:98-110)
-onto pair-generation strategies feeding one shared classification pipeline:
+onto two plans. Three share the halo-block kernel (operators/pairs.py): each
+block of W/S slides travels with a halo of its neighbours' adjacent ws-1
+slides, and one Arrow task emits every home point's verdict. They differ
+only in the neighbour plane:
 
-  mcod           -> exact banded blockwise self-join (operators/pairs.py)
-  lshod          -> seeded LSH bucket equi-join, 4 hashes / 10 tables / w=R
-                    (/root/reference/src/Executor.java:102-105)
-  approx_mclshod -> seeded LSH, 5 hashes / 10 tables / w=3R/2
+  mcod           -> exact Euclidean distance (operators/pairs.py)
+  lshod          -> distance masked by seeded LSH collisions, 4 hashes /
+                    10 tables / w=R (reference src/Executor.java:102-105;
+                    operators/lsh.py)
+  approx_mclshod -> the same at 5 hashes / 10 tables / w=3R/2
                     (/root/reference/src/Executor.java:106-109)
   approx_mcod    -> per-window bounded active set with seeded safe-inlier-
                     only eviction plus the ar approximation radius — the
@@ -28,21 +32,13 @@ from pyspark.sql import DataFrame
 from .config import DetectorConfig
 from .operators.approx_mcod import approx_mcod_detect
 from .operators.detector import DetectionResult, detect
-from .operators.lsh import lsh_neighbor_counts
-from .operators.windows import with_slide
 
 
 def run_detector(points: DataFrame, cfg: DetectorConfig) -> DetectionResult:
     """Dispatch by cfg.algorithm; ``points``: (id, features)."""
-    algo = cfg.algorithm.lower()
-    if algo == "mcod":
-        return detect(points, cfg)
-    if algo in ("lshod", "approx_mclshod"):
-        pts = with_slide(points, cfg)
-        return detect(points, cfg, slide_counts=lsh_neighbor_counts(pts, cfg))
-    if algo == "approx_mcod":
+    if cfg.algorithm.lower() == "approx_mcod":
         return approx_mcod_detect(points, cfg)
-    raise ValueError(f"unknown algorithm: {cfg.algorithm}")
+    return detect(points, cfg)
 
 
 def lshod_config(

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
-from .detector import DetectionResult
+from .detector import DetectionResult, lifetime_stats
 from .windows import n_batches, point_batches, with_slide
 
 EVAL_SCHEMA = "id long, b long, cnt long, is_inlier boolean"
@@ -165,18 +165,6 @@ def approx_mcod_detect(points: DataFrame, cfg: DetectorConfig) -> DetectionResul
         (~F.col("always_inlier")).alias("ever_outlier"),
     )
     outliers = per_point.where(~F.col("ever_inlier")).select("id").orderBy("id")
-    stats = per_point.agg(
-        F.sum((F.col("ever_inlier") & ~F.col("ever_outlier")).cast("long")).alias(
-            "n_only_inlier"
-        ),
-        F.sum((~F.col("ever_inlier") & F.col("ever_outlier")).cast("long")).alias(
-            "n_only_outlier"
-        ),
-        F.sum((F.col("ever_inlier") & F.col("ever_outlier")).cast("long")).alias(
-            "n_both_inlier_outlier"
-        ),
-        F.count(F.lit(1)).alias("n_points"),
-    )
     return DetectionResult(
-        evaluations=evals, outliers=outliers, per_point=per_point, stats=stats
+        outliers=outliers, per_point=per_point, stats=lifetime_stats(per_point)
     )

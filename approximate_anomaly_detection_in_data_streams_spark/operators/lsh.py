@@ -3,22 +3,29 @@
 Reimplements the reference's LSH index semantics — m p-stable hashes
 ``h_i = floor((v . a_i + b_i) / w)`` per table, a_i ~ N(0,1)^d,
 b_i ~ U[0, w), L tables, candidate set = union of colliding buckets
-(/root/reference/src/core/lsh/HashFunction.java:13-40,
-/root/reference/src/core/lsh/HashTable.java:81-101,
-/root/reference/src/core/lsh/LSHIndex.java:33-44) — as a *bucket-key
-equi-join*: per (point, table) a bucket key built from pure JVM codegen
-expressions (projection coefficients as float literals), exploded to
-(table, key) and joined within (table, key, id-block) groups. The
-theta-join becomes an equi-join + exact post-filter, turning the
-reference's in-heap probe into a shuffle whose keys we fully control —
-and the key derivation is portable enough that the full LSHOD detector
-carries an exact SQL oracle.
+(reference src/core/lsh/HashFunction.java:13-40, HashTable.java:81-101,
+LSHIndex.java:33-44). The per-(point, table)
+bucket keys are pure JVM codegen expressions (projection coefficients as
+float literals), portable enough that the full LSHOD detector carries an
+exact SQL oracle. Three consumers share them:
+
+  * the detectors (LSHOD, ApproxMCLSHOD) run the halo-block kernel of
+    operators/pairs.py: the L*m hash ints ride on each halo row and
+    ``lsh_plane`` masks the exact distance plane with "collides in >= 1
+    table" label planes, so each home point's verdict is computed in one
+    task, exactly like MCOD;
+  * ``lsh_neighbor_pairs`` is the JVM bucket equi-join: keys exploded to
+    (table, key) and joined within (table, key, id-block) groups, with an
+    exact post-filter;
+  * ``lsh_neighbor_counts`` is the capped tier: buckets thinned by seeded
+    hash order, counted by a bucket-exploded Arrow kernel.
 
 Differences from the reference, by design (SURVEY.md section 5):
   * the reference's RNG is unseeded and its buckets evict entries under
     pressure (/root/reference/src/core/lsh/HashTable.java:22-35), making
-    results nondeterministic; we seed everything and skip eviction, so our
-    candidate set is a superset of what a capped table would retain;
+    results nondeterministic; we seed everything and the detectors skip
+    eviction, so their candidate set is a superset of what a capped table
+    would retain;
   * missed collisions only *lower* neighbor counts, so the approximate
     outlier set is a superset of the exact one — recall of exact outliers
     is structurally 1.0 and precision is the quality metric (tested).
@@ -31,7 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
-from .pairs import _mask_bin_counts
+from .pairs import list_matrix
+
 
 def make_projections(
     cfg: DetectorConfig, dim: int
@@ -105,9 +113,9 @@ def lsh_neighbor_pairs(
 ) -> DataFrame:
     """Approximate neighbor pairs: bucket-collision candidates, exact post-filter.
 
-    Same output contract as ``exact_neighbor_pairs`` (both directions), but a
-    pair appears only if the two points collide in >= 1 of the L tables while
-    co-windowed. Fully JVM-side after key generation:
+    Output (i, j, slide_i, slide_j): every co-windowed pair within R that
+    collides in >= 1 of the L tables, in both directions. Fully JVM-side
+    after key generation:
 
       1. equi-join the (table, key, id-block)-exploded point table with
          itself — the block of W/S consecutive slides is part of the join
@@ -150,11 +158,7 @@ def lsh_neighbor_pairs(
     """
     from pyspark.sql.window import Window
 
-    # cfg.dim avoids a driver-side probe job during plan construction;
-    # the .first() fallback exists only for ad-hoc callers
-    dim = cfg.dim if cfg.dim > 0 else len(
-        points_with_slide.select("features").first()[0]
-    )
+    dim = lsh_dim(points_with_slide, cfg)
     max_gap = cfg.ws - 1
     r2 = float(cfg.r) ** 2
 
@@ -271,182 +275,66 @@ def lsh_neighbor_pairs(
     )
 
 
-def lsh_neighbor_counts(
-    points_with_slide: DataFrame,
-    cfg: DetectorConfig,
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """Slide-binned neighbor counts from LSH candidates — the detector's
-    scalable input. Output: (i, slide_i, slide_j, c, c_arr) — like
-    exact_neighbor_counts, the table may hold multiple rows per key
-    (home- and guest-block contributions); consumers aggregate additively.
-
-    Semantically identical to ``pairs_to_counts(lsh_neighbor_pairs(...))``
-    (property- and oracle-tested): same bucket collisions (union over the L
-    tables, each pair counted once), same exact distance filter, same
-    per-owner/per-direction counting.
-
-    Two physical strategies:
-
-      * uncapped (the production path): a banded BLOCK kernel
-        (``_lsh_counts_blocked``) — no per-table explode at all. Each
-        window block's rows land in one Arrow batch carrying the L x m
-        hash-int matrix, and "collides in >= 1 table" is L label planes
-        over the <= 2W-row block. The candidate multiset never exists, the
-        shuffle is ~L x smaller than the bucket equi-join's exploded table,
-        and the cross-table dedupe disappears structurally (measured: ~77%
-        of bucket-join candidate pairs at sf0.1 were duplicate-table
-        copies of an already-seen pair).
-      * capped: the bucket-exploded kernel (``_lsh_counts_bucketed``) —
-        eviction needs per-(table, key, block) bucket identity and seeded
-        hash order, so the explode is structural there.
-    """
-    dim = cfg.dim if cfg.dim > 0 else len(
-        points_with_slide.select("features").first()[0]
-    )
-    if bucket_cap is None:
-        return _lsh_counts_blocked(points_with_slide, cfg, dim)
-    return _lsh_counts_bucketed(points_with_slide, cfg, dim, bucket_cap)
+def lsh_dim(points: DataFrame, cfg: DetectorConfig) -> int:
+    """Feature width: cfg.dim avoids a probe job during plan
+    construction; the .first() fallback exists only for ad-hoc callers."""
+    return cfg.dim if cfg.dim > 0 else len(points.select("features").first()[0])
 
 
-def _lsh_counts_blocked(
-    points_with_slide: DataFrame, cfg: DetectorConfig, dim: int
-) -> DataFrame:
-    """Uncapped LSH counts via the banded block kernel (see
-    lsh_neighbor_counts). Same block layout as the exact detector
-    (operators/pairs.py::exact_neighbor_counts) with one extra per-block
-    mask: pair collides in >= 1 of the L tables — computed as L exact
-    label planes (void-dtype np.unique over each table's m key ints: exact
-    equality, no hashing) over the carried hash matrix."""
+def lsh_plane(cfg: DetectorConfig):
+    """Neighbor planes for the halo kernel (operators/pairs.py::
+    halo_verdicts): a pair is a neighbor iff it is within R AND collides
+    in >= 1 of the L tables — the union of colliding buckets
+    (reference src/core/lsh/LSHIndex.java:33-44) with no candidate
+    multiset and no cross-table dedupe. Collision is one exact label plane
+    per table (void-dtype np.unique over the table's m key ints: exact
+    equality, no hashing), labelled once per block."""
     L, m = cfg.num_tables, cfg.num_hashes
-    max_gap = cfg.ws - 1
     r2 = float(cfg.r) ** 2
 
-    sp = int(
-        points_with_slide.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
-    # home row in its own block; guest row fanned to the previous block —
-    # cross-block pairs are counted in the lower block's group exactly once.
-    # ONE explode, not a self-union: a union re-reads (and re-shuffles) the
-    # shared subtree twice when exchange reuse fails to kick in.
-    blk = ((F.col("slide") - 1) / F.lit(cfg.ws)).cast("long")
-    fanned = (
-        points_with_slide.select(
-            "id",
-            "slide",
-            "features",
-            F.explode(
-                F.array(
-                    F.struct(blk.alias("g"), F.lit(True).alias("home")),
-                    F.struct((blk - 1).alias("g"), F.lit(False).alias("home")),
-                )
-            ).alias("fan"),
-        )
-        .select("id", "slide", "features", "fan.g", "fan.home")
-        .where(F.col("g") >= 0)
-    )
-    # the L*m hash expressions run AFTER the g-shuffle: the parquet scan
-    # may have only a couple of splits (row-group granularity), while the
-    # post-exchange projection fuses into the (sp-way parallel) kernel
-    # stage — the scan-side stage only fans narrow rows into the shuffle.
-    keyed = with_bucket_key_ints(fanned.repartition(sp, "g"), cfg, dim)
+    def make(X: np.ndarray, hk: np.ndarray):
+        labels = []
+        for t in range(L):
+            rows = np.ascontiguousarray(hk[:, t * m : (t + 1) * m])
+            void = rows.view([("", rows.dtype)] * m).ravel()
+            labels.append(np.unique(void, return_inverse=True)[1].ravel())
 
-    def emit(batches):
-        import pyarrow as pa
-
-        arrow_chunks = [b for b in batches if b.num_rows]
-        if not arrow_chunks:
-            return
-        tbl = pa.Table.from_batches(arrow_chunks)
-        if tbl.num_rows < 2:
-            return
-
-        def flat_matrix(name: str) -> np.ndarray:
-            col = tbl.column(name).combine_chunks()
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            offs = col.offsets.to_numpy(zero_copy_only=False)
-            widths = np.diff(offs)
-            if len(widths) and (widths == widths[0]).all():
-                return flat.reshape(len(widths), int(widths[0]))
-            return np.stack(  # ragged fallback (never for fixed dim/L*m)
-                [flat[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)]
-            )
-
-        feats_mat = flat_matrix("features").astype(np.float64, copy=False)
-        hk_mat = flat_matrix("hk")
-        g_arr = tbl.column("g").to_numpy(zero_copy_only=False)
-        id_arr = tbl.column("id").to_numpy(zero_copy_only=False)
-        slides_all = tbl.column("slide").to_numpy(zero_copy_only=False)
-        home_all = tbl.column("home").to_numpy(zero_copy_only=False)
-        order = np.lexsort((id_arr, g_arr))
-        g_arr, id_arr = g_arr[order], id_arr[order]
-        slides_all = slides_all[order]
-        home_all = home_all[order]
-        feats_all = feats_mat[order]
-        hk_all = hk_mat[order]
-        bounds = np.flatnonzero(
-            np.concatenate(([True], g_arr[1:] != g_arr[:-1]))
-        )
-        bounds = np.append(bounds, len(g_arr))
-        parts: list[tuple[np.ndarray, ...]] = []
-        eq = None
-        for b0, b1 in zip(bounds[:-1], bounds[1:]):
-            n = b1 - b0
-            if n < 2:
-                continue
-            X = feats_all[b0:b1]
+        def plane(r0: int, r1: int, c0: int, c1: int) -> np.ndarray:
             # per-dimension (a-b)^2 accumulated left-to-right — the SAME
             # IEEE fold as lsh_neighbor_pairs' unrolled codegen predicate
-            # and the DuckDB oracle (ADVICE r2).
-            diff = X[:, 0][:, None] - X[:, 0][None, :]
-            D2 = diff * diff
+            # and the DuckDB oracle (ADVICE r2)
+            diff = X[r0:r1, 0][:, None] - X[c0:c1, 0][None, :]
+            d2 = diff * diff
             for d in range(1, X.shape[1]):
-                diff = X[:, d][:, None] - X[:, d][None, :]
-                D2 += diff * diff
-            M = D2 <= r2
-            M[np.arange(n), np.arange(n)] = False
-            # collision mask: >= 1 table where all m key ints are equal.
-            # One exact label plane per table (4x less plane traffic than
-            # m component planes at the default m=4).
-            K = hk_all[b0:b1].reshape(n, L, m)
-            C = np.zeros((n, n), dtype=bool)
-            if eq is None or eq.shape[0] < n:
-                eq = np.empty((n, n), dtype=bool)
-            e = eq[:n, :n]
-            for t in range(L):
-                rows = np.ascontiguousarray(K[:, t, :])
-                void = rows.view([("", rows.dtype)] * m).ravel()
-                _, labels = np.unique(void, return_inverse=True)
-                np.equal(labels[:, None], labels[None, :], out=e)
-                C |= e
-            M &= C
-            n_home_g = int(home_all[b0:b1].sum())
-            if n_home_g and not home_all[b0:b1][:n_home_g].all():
-                raise AssertionError("home rows must form an id-sorted prefix")
-            parts.extend(
-                _mask_bin_counts(
-                    M, id_arr[b0:b1], slides_all[b0:b1], n_home_g, max_gap
-                )
-            )
-        if parts:
-            cols = [np.concatenate([p[k] for p in parts]) for k in range(5)]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "i": pa.array(cols[0], type=pa.int64()),
-                    "slide_i": pa.array(cols[1], type=pa.int64()),
-                    "slide_j": pa.array(cols[2], type=pa.int64()),
-                    "c": pa.array(cols[3], type=pa.int64()),
-                    "c_arr": pa.array(cols[4], type=pa.int64()),
-                }
-            )
+                diff = X[r0:r1, d][:, None] - X[c0:c1, d][None, :]
+                d2 += diff * diff
+            hit = labels[0][r0:r1, None] == labels[0][None, c0:c1]
+            for lab in labels[1:]:
+                hit |= lab[r0:r1, None] == lab[None, c0:c1]
+            return (d2 <= r2) & hit
 
-    # NO consolidating groupBy here: like exact_neighbor_counts, the table
-    # may hold a home-block and a guest-block row per (i, slide_j), and
-    # every consumer (the pivoted verdicts, batch_counts, arrival_counts)
-    # aggregates additively — a groupBy at this seam would pay a full
-    # extra exchange of the count table for nothing.
-    return keyed.mapInArrow(
-        emit, "i long, slide_i long, slide_j long, c long, c_arr long"
+        return plane
+
+    return make
+
+
+def lsh_neighbor_counts(
+    points_with_slide: DataFrame, cfg: DetectorConfig, bucket_cap: int
+) -> DataFrame:
+    """Slide-binned neighbor counts (i, slide_i, slide_j, c, c_arr) over
+    CAPPED LSH tables — each (table, key, block) bucket keeps its first
+    ``bucket_cap`` members in seeded-hash order. The table may hold a
+    home- and a guest-block row per key; consumers aggregate additively.
+
+    Semantically identical to
+    ``pairs_to_counts(lsh_neighbor_pairs(..., bucket_cap))`` (tested in
+    tests/test_lsh_capped.py). Eviction needs per-(table, key, block)
+    bucket identity and seeded hash order, so the bucket explode is
+    structural here; the uncapped detectors use the halo kernel instead
+    (``lsh_plane``).
+    """
+    return _lsh_counts_bucketed(
+        points_with_slide, cfg, lsh_dim(points_with_slide, cfg), bucket_cap
     )
 
 
@@ -454,7 +342,7 @@ def _lsh_counts_bucketed(
     points_with_slide: DataFrame,
     cfg: DetectorConfig,
     dim: int,
-    bucket_cap: int | None,
+    bucket_cap: int,
 ) -> DataFrame:
     """Capped LSH counts via the bucket-exploded kernel (see
     lsh_neighbor_counts): per-(table, key, block) groups, vectorized pair
@@ -486,21 +374,20 @@ def _lsh_counts_bucketed(
         F.posexplode(F.array(*key_t)).alias("t", "key"),
         (((F.col("slide") - 1) / F.lit(cfg.ws)).cast("long")).alias("g"),
     )
-    if bucket_cap is not None:
-        w = Window.partitionBy("t", "key", "g").orderBy(
-            F.xxhash64("id", F.lit(cfg.seed))
-        )
-        keyed = (
-            keyed.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= bucket_cap)
-            .drop("_rn")
-        )
-        # survival bitmask for the survivor-restricted min-table dedupe —
-        # same semantics as lsh_neighbor_pairs (see its docstring)
-        surv = keyed.groupBy("id", "g").agg(
-            F.sum(F.expr("shiftleft(cast(1 as bigint), t)")).alias("sm")
-        )
-        keyed = keyed.join(surv, ["id", "g"])
+    w = Window.partitionBy("t", "key", "g").orderBy(
+        F.xxhash64("id", F.lit(cfg.seed))
+    )
+    keyed = (
+        keyed.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= bucket_cap)
+        .drop("_rn")
+    )
+    # survival bitmask for the survivor-restricted min-table dedupe —
+    # same semantics as lsh_neighbor_pairs (see its docstring)
+    surv = keyed.groupBy("id", "g").agg(
+        F.sum(F.expr("shiftleft(cast(1 as bigint), t)")).alias("sm")
+    )
+    keyed = keyed.join(surv, ["id", "g"])
     # home row in its own block; guest row fanned to the previous block —
     # cross-block pairs are counted in the lower block's group exactly once
     fanned = keyed.withColumn("home", F.lit(True)).unionByName(
@@ -516,35 +403,18 @@ def _lsh_counts_bucketed(
         if not arrow_chunks:
             return
         tbl = pa.Table.from_batches(arrow_chunks)
-
-        def flat_matrix(name: str, width_hint: int) -> np.ndarray:
-            col = tbl.column(name).combine_chunks()
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            offs = col.offsets.to_numpy(zero_copy_only=False)
-            widths = np.diff(offs)
-            if len(widths) and (widths == widths[0]).all():
-                return flat.reshape(len(widths), int(widths[0]))
-            return np.stack(  # ragged fallback (never for fixed dim/L*m)
-                [flat[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)]
-            )
-
-        # flat-buffer reads: the exploded point table is n x L rows, and
-        # per-row list payloads (features, the L*m hash matrix) would
-        # otherwise materialize millions of tiny object ndarrays — the
-        # conversion, not the math, dominated this kernel (same finding
-        # as operators/pairs.py::exact_neighbor_counts)
-        feats_mat = flat_matrix("features", 0).astype(np.float64, copy=False)
-        hk_mat = flat_matrix("hk", L * m)
+        # the exploded point table is n x L rows: per-row list payloads
+        # (features, the L*m hash matrix) read as flat buffers
+        id_arr0 = tbl.column("id").to_numpy(zero_copy_only=False)
+        feats_mat = list_matrix(tbl, "features", id_arr0, dim).astype(
+            np.float64, copy=False
+        )
+        hk_mat = list_matrix(tbl, "hk", id_arr0, L * m)
         t_arr = tbl.column("t").to_numpy(zero_copy_only=False)
         g_arr = tbl.column("g").to_numpy(zero_copy_only=False)
-        id_arr0 = tbl.column("id").to_numpy(zero_copy_only=False)
         slide_arr0 = tbl.column("slide").to_numpy(zero_copy_only=False)
         home_arr0 = tbl.column("home").to_numpy(zero_copy_only=False)
-        sm_arr0 = (
-            tbl.column("sm").to_numpy(zero_copy_only=False)
-            if "sm" in tbl.schema.names
-            else np.full(tbl.num_rows, -1, dtype=np.int64)
-        )
+        sm_arr0 = tbl.column("sm").to_numpy(zero_copy_only=False)
         # the bucket identity is the row's OWN table's m raw key ints,
         # gathered from the carried hash matrix — NOT the shuffled `key`
         # column (a 64-bit distribution hash on the hot path; see the
@@ -556,7 +426,7 @@ def _lsh_counts_bucketed(
         # sort by (t, g, key ints, id): groups contiguous AND rows
         # id-ascending within each group, so slide (monotone in id) is
         # sorted and each neighbor-slide bin is a contiguous column range
-        # (the cumsum trick — operators/pairs.py::_counts_emit). All-int64
+        # (the slice-sum trick — operators/pairs.py::slide_bins). All-int64
         # lexsort — the former string-key sort compared Python objects.
         order = np.lexsort(
             (id_arr0, *(K_own[:, j] for j in range(m - 1, -1, -1)), g_arr, t_arr)
@@ -643,8 +513,8 @@ def _lsh_counts_bucketed(
             si, sj = si[keep], sj[keep]
             # min-table dedupe: a pair is owned by the FIRST table whose
             # keys collide (exact m-int comparison against the carried
-            # hash matrix — no hashing, no labels). Survivor restriction
-            # (capped runs): an earlier table only owns the pair if BOTH
+            # hash matrix — no hashing, no labels). Survivor restriction:
+            # an earlier table only owns the pair if BOTH
             # members survived its cap (semantics of lsh_neighbor_pairs).
             tpair = t_arr[i_idx]
             t_max = int(tpair.max(initial=0))
@@ -654,10 +524,9 @@ def _lsh_counts_bucketed(
                 base = tp * m
                 for jj in range(m):
                     eq &= hk_all[i_idx, base + jj] == hk_all[j_idx, base + jj]
-                if bucket_cap is not None:
-                    eq &= (
-                        ((sm_all[i_idx] >> tp) & (sm_all[j_idx] >> tp)) & 1
-                    ).astype(bool)
+                eq &= (
+                    ((sm_all[i_idx] >> tp) & (sm_all[j_idx] >> tp)) & 1
+                ).astype(bool)
                 coll |= eq
             surv = ~coll
             i_s = i_idx[surv]
@@ -684,8 +553,7 @@ def _lsh_counts_bucketed(
 
     # no sortWithinPartitions: the kernel lexsorts its whole partition
     # anyway (all-int keys), so a JVM sort before it is pure waste.
-    # No consolidating groupBy either — consumers aggregate additively
-    # (same contract as exact_neighbor_counts and the blocked path).
+    # No consolidating groupBy either — consumers aggregate additively.
     return fanned.repartition(sp, "t", "key", "g").mapInArrow(
         emit, "i long, slide_i long, slide_j long, c long, c_arr long"
     )

@@ -1,301 +1,210 @@
-"""Exact neighbor-pair generation: the windowed distance self-join (J1).
+"""Halo-block detector kernel: per-point verdicts in one Arrow task (J1/A1-A3).
 
 The reference answers "neighbors of p within R in the current window" with an
 in-heap M-tree range query per point (/root/reference/src/core/mtree/MTree.java:413-415).
-The Spark-native equivalent is a *banded blockwise self-join*:
+A point's status at every moment depends only on the window content, so the
+Spark-native equivalent computes each point's whole status trajectory inside
+ONE task that holds its neighbourhood:
 
-  * two points can ever share a window iff their slides differ by < W/S
-    (see operators/windows.py), so partition the stream into blocks of
-    W/S consecutive slides (= W consecutive ids);
-  * co-windowed pairs live in the same or adjacent blocks, so fan each
-    block's points out to (own block as "home") and (previous block as
-    "guest") — a 2x duplication, independent of n;
-  * per block, compute pairwise Euclidean distances for <= 2W points in one
-    Arrow batch with chunked NumPy matrix math (no per-row Python), emit
-    pairs with dist <= R, both directions.
+  * two points can ever share a window iff their slides differ by < ws = W/S
+    (see operators/windows.py), so partition the stream into blocks of ws
+    consecutive slides (= W consecutive ids);
+  * fan each block out with a HALO — the previous block's last ws-1 slides,
+    the home block, and the next block's first ws-1 slides (< 3x the
+    feature rows, independent of n) — so every home point's 2ws-1
+    co-window slides land in the same ``mapInArrow`` task;
+  * per home slide group, the neighbor plane (exact distance, or the LSH
+    variants' distance + collision mask, operators/lsh.py) is clamped to
+    the group's 2ws-1-slide column span and chunked by CHUNK rows; the
+    neighbors are binned by slide and ``slide_verdicts`` turns the bins
+    into (ever_inlier, ever_outlier). One row leaves the kernel per home
+    point: there is no count shuffle and no JVM verdict aggregation.
 
-Total work is O(n * W * d / block) spread over n/W independent tasks —
-linear in n and embarrassingly parallel, which is what makes the two-cluster
-scaling criterion attainable (the reference is single-threaded;
+Total work is O(n * W * d) spread over n/W independent tasks — linear in n
+and embarrassingly parallel (the reference is single-threaded;
 /root/reference/src/Executor.java:112-114).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
 
-PAIR_SCHEMA = "i long, j long, slide_i long, slide_j long"
+VERDICT_SCHEMA = "id long, ever_inlier boolean, ever_outlier boolean"
 
-# Chunk of left-hand rows per distance-matrix block: bounds peak memory at
-# CHUNK * 2W doubles regardless of window size.
+# Chunk of home rows per neighbor plane: bounds peak memory at
+# CHUNK x (2ws-1) slides of doubles regardless of stream length.
 CHUNK = 1024
 
+# plane(r0, r1, c0, c1) -> boolean (r1-r0, c1-c0) neighbor mask between the
+# block's sorted rows [r0, r1) and columns [c0, c1)
+Plane = Callable[[int, int, int, int], np.ndarray]
 
-def _pairwise_emit(
-    X: np.ndarray,
-    ids: np.ndarray,
-    slides: np.ndarray,
-    home: np.ndarray,
-    r2: float,
-    max_slide_gap: int,
-) -> pd.DataFrame:
-    """Emit neighbor pairs (both directions) for one block's home+guest rows."""
-    sq = np.einsum("ij,ij->i", X, X)
-    out_i: list[np.ndarray] = []
-    out_j: list[np.ndarray] = []
-    home_idx = np.flatnonzero(home)
-    for start in range(0, len(home_idx), CHUNK):
-        rows = home_idx[start : start + CHUNK]
-        # squared distances rows x all, via ||a||^2 + ||b||^2 - 2ab
-        d2 = sq[rows, None] + sq[None, :] - 2.0 * (X[rows] @ X.T)
-        mask = d2 <= r2
-        # p must be home (rows are), q strictly later, slide gap < W/S
-        mask &= ids[None, :] > ids[rows, None]
-        mask &= (slides[None, :] - slides[rows, None]) <= max_slide_gap
-        pi, qj = np.nonzero(mask)
-        out_i.append(rows[pi])
-        out_j.append(qj)
-    if out_i:
-        ii = np.concatenate(out_i)
-        jj = np.concatenate(out_j)
-    else:
-        ii = np.empty(0, dtype=np.int64)
-        jj = ii
-    return pd.DataFrame(
-        {
-            "i": np.concatenate([ids[ii], ids[jj]]),
-            "j": np.concatenate([ids[jj], ids[ii]]),
-            "slide_i": np.concatenate([slides[ii], slides[jj]]),
-            "slide_j": np.concatenate([slides[jj], slides[ii]]),
-        }
+
+def list_matrix(tbl, name: str, ids: np.ndarray, width: int = 0) -> np.ndarray:
+    """An Arrow list column as one (rows, width) matrix — the input
+    contract at every detector kernel's edge.
+
+    The column reads as ONE flat buffer reshaped by its offsets (a per-row
+    object array costs more than the distance math itself). Every row must
+    have ``width`` values (the first row's width when 0), and float values
+    must be finite — a NaN distance compares false, so a NaN point would
+    silently become an outlier. Violations raise ValueError naming an
+    offending id.
+    """
+    col = tbl.column(name).combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    widths = np.diff(col.offsets.to_numpy(zero_copy_only=False))
+    expected = width or (int(widths[0]) if len(widths) else 0)
+    bad = np.flatnonzero(widths != expected)
+    if len(bad):
+        raise ValueError(
+            f"ragged {name}: expected width {expected}, found "
+            f"{int(widths[bad[0]])} at id {int(ids[bad[0]])}"
+        )
+    mat = flat.reshape(len(widths), expected)
+    if mat.dtype.kind == "f":
+        bad = np.flatnonzero(~np.isfinite(mat).all(axis=1))
+        if len(bad):
+            raise ValueError(
+                f"non-finite {name} at id {int(ids[bad[0]])}: "
+                f"{mat[bad[0]].tolist()}"
+            )
+    return mat
+
+
+def halo_blocks(points_with_slide: DataFrame, cfg: DetectorConfig) -> DataFrame:
+    """(id, slide, features, g): each point in its home block g and in the
+    halo of every adjacent block whose 2ws-1-slide reach covers it
+    (slides [g*ws - ws + 2, (g+1)*ws + ws - 1]), hash-partitioned by g."""
+    ws = cfg.ws
+    blk = ((F.col("slide") - 1) / F.lit(ws)).cast("long")
+    g = F.col("g")
+    fanned = points_with_slide.select(
+        "id", "slide", "features", F.explode(F.array(blk, blk - 1, blk + 1)).alias("g")
+    ).where(
+        (g >= 0)
+        & (F.col("slide") > g * ws - ws + 1)
+        & (F.col("slide") < (g + 1) * ws + ws)
     )
+    sp = int(
+        points_with_slide.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
+    )
+    # no sortWithinPartitions: the kernel lexsorts its whole partition by
+    # (g, id) anyway, so a JVM sort before it is pure waste
+    return fanned.repartition(sp, "g")
 
 
-COUNT_SCHEMA = "i long, slide_i long, slide_j long, c long, c_arr long"
+def exact_plane(cfg: DetectorConfig) -> Callable[..., Plane]:
+    """Exact neighbor planes: squared distance via ||a||^2 + ||b||^2 - 2a.b
+    — the arithmetic the SQL oracle twins reproduce bit-for-bit."""
+    r2 = float(cfg.r) * float(cfg.r)
+
+    def make(X: np.ndarray, _keys) -> Plane:
+        sq = np.einsum("ij,ij->i", X, X)
+
+        def plane(r0: int, r1: int, c0: int, c1: int) -> np.ndarray:
+            d2 = sq[r0:r1, None] + sq[None, c0:c1] - 2.0 * (X[r0:r1] @ X[c0:c1].T)
+            return d2 <= r2
+
+        return plane
+
+    return make
 
 
-def _mask_bin_counts(
-    M: np.ndarray,
-    ids: np.ndarray,
-    slides: np.ndarray,
-    n_home: int,
-    max_gap: int,
-) -> list[tuple[np.ndarray, ...]]:
-    """Bin a boolean neighbor mask by neighbor slide — the slide-grouped
-    slice-sum scheme of ``_counts_emit`` for callers that already hold a
-    full n x n mask (the LSH bucket kernel): rows of one slide share
-    their per-bin column ranges, guest rows (an id-sorted suffix — home
-    rows are the prefix ``[:n_home]``) clamp their bins to the home
-    prefix, and ``c_arr``'s strict id_j < id_i bound is full count /
-    zero / short own-slide prefix for bins left / right / at the own
-    slide. One read-only pass over the mask replaces two padded
-    n x (n+1) int32 row-cumsums plus their gathers.
-    Returns (i, slide_i, slide_j, c, c_arr) ndarray tuples.
+def slide_bins(
+    plane: Plane, ids: np.ndarray, slides: np.ndarray, h0: int, h1: int, ws: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Neighbor counts of the home rows [h0, h1) of one id-sorted block,
+    binned by neighbor slide offset -(ws-1)..ws-1, plus each row's
+    arrival count (neighbors with a smaller id,
+    reference src/algorithms/MCOD.java:302-317).
+
+    Rows of one slide share their per-bin column ranges (slide is monotone
+    in id), so per slide group the bins are SLICE SUMS over one plane
+    clamped to the group's 2ws-1-slide span. Bins left of the own slide
+    hold only smaller ids and bins right only larger, so the arrival count
+    needs an id comparison on the own-slide columns alone (strict, so
+    duplicate ids exclude each other).
     """
-    n = len(ids)
-    n_bins = 2 * max_gap + 1
-    fp = np.searchsorted(ids, ids, side="left")
-    out: list[tuple[np.ndarray, ...]] = []
-    sg = np.flatnonzero(np.concatenate(([True], slides[1:] != slides[:-1])))
-    sg = np.append(sg, n)
-    for s0, s1 in zip(sg[:-1], sg[1:]):
+    n_bins = 2 * ws - 1
+    bins = np.zeros((h1 - h0, n_bins), dtype=np.int64)
+    arrival = np.zeros(h1 - h0, dtype=np.int64)
+    sg = np.flatnonzero(np.diff(slides[h0:h1])) + h0 + 1
+    for s0, s1 in zip(np.concatenate(([h0], sg)), np.concatenate((sg, [h1]))):
         si = int(slides[s0])
-        guest = s0 >= n_home
-        edges = np.searchsorted(
-            slides, np.arange(si - max_gap, si + max_gap + 2)
-        )
-        if guest:
-            edges = np.minimum(edges, n_home)
-        rows_m = M[s0:s1]
-        m = s1 - s0
-        c = np.zeros((m, n_bins), dtype=np.int64)
-        for b in range(n_bins):
-            b0, b1 = int(edges[b]), int(edges[b + 1])
-            if b1 > b0:
-                c[:, b] = rows_m[:, b0:b1].sum(axis=1, dtype=np.int64)
-        c_arr = np.zeros_like(c)
-        c_arr[:, :max_gap] = c[:, :max_gap]
-        lo_own, hi_own = int(edges[max_gap]), int(edges[max_gap + 1])
-        if hi_own > lo_own:
-            own_cs = np.zeros((m, hi_own - lo_own + 1), dtype=np.int32)
-            np.cumsum(
-                rows_m[:, lo_own:hi_own], axis=1, out=own_cs[:, 1:],
-                dtype=np.int32,
-            )
-            pos = np.clip(fp[s0:s1] - lo_own, 0, hi_own - lo_own)
-            c_arr[:, max_gap] = own_cs[np.arange(m), pos]
-        ri, bi = np.nonzero(c)
-        out.append(
-            (
-                ids[s0:s1][ri],
-                slides[s0:s1][ri],
-                slides[s0:s1][ri] + (bi - max_gap),
-                c[ri, bi],
-                c_arr[ri, bi],
-            )
-        )
-    return out
-
-
-def _counts_emit(
-    X: np.ndarray,
-    ids: np.ndarray,
-    slides: np.ndarray,
-    home: np.ndarray,
-    r2: float,
-    max_slide_gap: int,
-) -> list[tuple[np.ndarray, ...]]:
-    """Per-point neighbor counts binned by the neighbor's slide.
-
-    The downstream aggregations (A1/A2: count_after / preceding-neighbor
-    counts) only consume counts per (owner, owner_slide, neighbor_slide) —
-    never the pair identities — so emitting the ~(2*ws - 1) count bins per
-    point instead of the O(W) raw pairs cuts the shuffle by ~W/ws (100x at
-    W=400 on dense data). This is SURVEY.md section 7 hard part (a) taken
-    to its conclusion.
-
-    Ownership rule (each co-window pair counted once per owner):
-      * home rows count neighbors among ALL block rows (home + guest);
-      * guest rows count neighbors among HOME rows only (their guest-block
-        pairs are home-home in the next block's group).
-    ``c_arr`` bins the subset with neighbor id < owner id (arrival-moment
-    counts, /root/reference/src/algorithms/MCOD.java:302-317).
-
-    Returns a list of (i, slide_i, slide_j, c, c_arr) ndarray tuples — the
-    caller concatenates ONCE per partition and emits one Arrow batch.
-    Building a pandas DataFrame per W-sized block (2,500 of them per 1M
-    points) was ~2/3 of the kernel's Python time, and the per-block
-    allocation churn is exactly the concurrent-allocation pattern this
-    guest anti-scales on (BENCH.md round-3 allocator forensics).
-    """
-    n = len(ids)
-    # SLIDE-GROUPED bin counting: rows arrive sorted by id, and slide =
-    # (id-1)//S + 1 is monotone in id, so (a) every row of one slide
-    # shares the same per-bin column ranges [lo(sj), hi(sj)), and (b) the
-    # home rows form a prefix of the id-sorted group (guest rows belong to
-    # the NEXT block, whose ids are all larger). Per slide group the bins
-    # partition a contiguous column span, so the counts are per-bin SLICE
-    # SUMS — one read-only pass over the boolean plane — instead of the
-    # former two padded m x (n+1) int32 row-cumsums (write+read traffic
-    # that dominated the kernel, and the np.where(home) plane the
-    # guest-row variant added on top). The distance plane itself is also
-    # clamped to the group's bin span (guest groups: the home prefix
-    # only), which keeps it cache-resident at typical slide sizes.
-    order = np.argsort(ids, kind="stable")
-    if not np.array_equal(order, np.arange(n)):
-        X, ids, slides, home = X[order], ids[order], slides[order], home[order]
-    sq = np.einsum("ij,ij->i", X, X)
-    n_bins = 2 * max_slide_gap + 1
-    out: list[tuple[np.ndarray, ...]] = []
-    n_home = int(home.sum())
-    if n_home and not home[:n_home].all():
-        # structural invariant of the banded block layout (home = own
-        # block, guest = next block's ids, blocks partition slides)
-        raise AssertionError("home rows must form an id-sorted prefix")
-    # first position of each row's own id (strict ids[j] < ids[i] bound —
-    # NOT the row position: duplicate ids must exclude each other)
-    fp_all = np.searchsorted(ids, ids, side="left")
-    sg = np.flatnonzero(np.concatenate(([True], slides[1:] != slides[:-1])))
-    sg = np.append(sg, n)
-    for s0, s1 in zip(sg[:-1], sg[1:]):
-        si = int(slides[s0])
-        # a slide lives in exactly one block, so a slide group is purely
-        # home or purely guest; guest rows count HOME neighbors only
-        # (their guest-guest pairs are home-home in the next block's
-        # group) — an edge clamp to the home prefix, not a masked pass
-        guest = s0 >= n_home
-        edges = np.searchsorted(
-            slides, np.arange(si - max_slide_gap, si + max_slide_gap + 2)
-        )
-        if guest:
-            edges = np.minimum(edges, n_home)
+        edges = np.searchsorted(slides, np.arange(si - ws + 1, si + ws + 1))
         col0, col1 = int(edges[0]), int(edges[-1])
-        if col1 <= col0:
-            continue
-        lo_own = int(edges[max_slide_gap]) - col0
-        hi_own = int(edges[max_slide_gap + 1]) - col0
-        Xc = X[col0:col1]
-        sqc = sq[col0:col1]
         for c0 in range(s0, s1, CHUNK):
             c1 = min(c0 + CHUNK, s1)
-            rows = np.arange(c0, c1)
-            m = len(rows)
-            # exact (unchanged) distance arithmetic — the oracle twins
-            # reproduce this identity bit-for-bit
-            d2 = sq[rows, None] + sqc[None, :] - 2.0 * (X[rows] @ Xc.T)
-            msk = d2 <= r2
-            if not guest:  # guest rows' own column is outside the clamp
-                msk[np.arange(m), rows - col0] = False  # no self-pairs
-            c = np.zeros((m, n_bins), dtype=np.int64)
+            msk = plane(c0, c1, col0, col1)
+            msk[np.arange(c1 - c0), np.arange(c0, c1) - col0] = False  # no self-pairs
+            cnt = bins[c0 - h0 : c1 - h0]
             for b in range(n_bins):
                 b0, b1 = int(edges[b]) - col0, int(edges[b + 1]) - col0
                 if b1 > b0:
-                    c[:, b] = msk[:, b0:b1].sum(axis=1, dtype=np.int64)
-            # c_arr (strict id_j < id_i): bins left of the own slide hold
-            # only smaller ids (slide monotone in id) -> full count; bins
-            # right hold only larger -> 0; the own-slide bin needs the
-            # per-row prefix at fp (duplicate ids excluded via side=left)
-            c_arr = np.zeros_like(c)
-            c_arr[:, :max_slide_gap] = c[:, :max_slide_gap]
-            if hi_own > lo_own:
-                own_cs = np.zeros((m, hi_own - lo_own + 1), dtype=np.int32)
-                np.cumsum(
-                    msk[:, lo_own:hi_own], axis=1, out=own_cs[:, 1:],
-                    dtype=np.int32,
-                )
-                pos = np.clip(fp_all[rows] - (lo_own + col0), 0, hi_own - lo_own)
-                c_arr[:, max_slide_gap] = own_cs[np.arange(m), pos]
-            ri, bi = np.nonzero(c)
-            out.append(
-                (
-                    ids[rows[ri]],
-                    slides[rows[ri]],
-                    slides[rows[ri]] + (bi - max_slide_gap),
-                    c[ri, bi],
-                    c_arr[ri, bi],
-                )
-            )
-    return out
+                    cnt[:, b] = msk[:, b0:b1].sum(axis=1)
+            own = msk[:, s0 - col0 : s1 - col0] & (ids[None, s0:s1] < ids[c0:c1, None])
+            arrival[c0 - h0 : c1 - h0] = cnt[:, : ws - 1].sum(axis=1) + own.sum(axis=1)
+    return bins, arrival
 
 
-def exact_neighbor_counts(
-    points_with_slide: DataFrame, cfg: DetectorConfig
-) -> DataFrame:
-    """Per-(point, neighbor-slide) neighbor counts — the exact detector's
-    scalable aggregate input. Output: (i, slide_i, slide_j, c, c_arr).
+def slide_verdicts(
+    bins: np.ndarray, arrival: np.ndarray, slide: np.ndarray, b_total: int, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-point (ever_inlier, ever_outlier) from slide-binned neighbor
+    counts: ``bins[:, o + ws - 1]`` = neighbors in slide(p) + o.
 
-    Same banded block layout as ``exact_neighbor_pairs`` (2x fan-out,
-    <= 2W points per task), but each task emits O(points x ws) count rows
-    instead of O(points x W) pairs.
+    A point p is evaluated at batches slide(p) + t, t in [0, n_b) with
+    n_b = min(b_total, slide(p) + ws - 1) - slide(p) + 1 (operators/
+    windows.py), and A[o] counts its neighbors in slide(p) + o:
+
+      * end(t) = window sum of A over offsets [t - ws + 1, t];
+      * pre(t) = end(t) - A[t] for t >= 1 (ingestion of batch t adds
+        exactly its arrivals between the two moments);
+      * arrival = neighbors with a smaller id.
+
+    Counts only grow between pre and end of a batch, so these three cover
+    the full status trajectory (operators/detector.py module docstring).
     """
-    ws = cfg.ws
-    r2 = float(cfg.r) * float(cfg.r)
-    max_gap = ws - 1
-
-    block = ((F.col("slide") - 1) / F.lit(ws)).cast("long")
-    base = points_with_slide.select("id", "features", "slide")
-    fanned = base.withColumn("g", block).withColumn("is_home", F.lit(True)).unionByName(
-        base.withColumn("g", block - 1)
-        .withColumn("is_home", F.lit(False))
-        .where(F.col("g") >= 0)
+    ws = (bins.shape[1] + 1) // 2
+    cs = np.zeros((len(bins), 2 * ws), dtype=np.int64)
+    np.cumsum(bins, axis=1, out=cs[:, 1:])
+    end = cs[:, ws:] - cs[:, :ws]
+    pre = end - bins[:, ws - 1 :]
+    n_b = np.minimum(b_total, slide + ws - 1) - slide + 1
+    live = np.arange(ws)[None, :] < n_b[:, None]
+    ever_inlier = (live & (end >= k)).any(axis=1)
+    ever_outlier = (
+        (live & (end < k)).any(axis=1)
+        | (live[:, 1:] & (pre[:, 1:] < k)).any(axis=1)
+        | (arrival < k)
     )
+    return ever_inlier, ever_outlier
 
-    # partition-scan (mapInArrow over repartition+sort), not per-group
-    # applyInPandas: a long stream has thousands of W-sized blocks and the
-    # per-group Arrow round-trip overhead dominates the (small) per-block
-    # math — one batch per partition amortizes it (same pattern as the
-    # LSH counts kernel and the MinHash band kernel). mapInArrow rather
-    # than mapInPandas because the feature column reads as ONE flat
-    # float64 buffer reshaped (n, dim) — the pandas path materializes a
-    # per-row object ndarray (300k tiny arrays) that costs more than the
-    # distance math itself (measured ~8 s vs ~2 s at 300k x 12d).
+
+def halo_verdicts(
+    blocks: DataFrame,
+    cfg: DetectorConfig,
+    b_total: int,
+    make_plane: Callable[..., Plane],
+) -> DataFrame:
+    """(id, ever_inlier, ever_outlier) for every input point, from the
+    ``halo_blocks`` layout. ``make_plane(X, keys)`` builds one block's
+    neighbor plane from its id-sorted features and, when the frame carries
+    an ``hk`` column (the LSH variants), its hash-key matrix.
+
+    partition-scan (mapInArrow over the g-repartition), not per-group
+    applyInPandas: a long stream has thousands of W-sized blocks and the
+    per-group Arrow round-trip dominates the per-block math.
+    """
+    ws, k, dim = cfg.ws, cfg.k, cfg.dim
+
     def emit(batches):
         import pyarrow as pa
 
@@ -303,106 +212,43 @@ def exact_neighbor_counts(
         if not chunks:
             return
         tbl = pa.Table.from_batches(chunks)
-        if tbl.num_rows < 2:
-            return
-        g_arr = tbl.column("g").to_numpy(zero_copy_only=False)
-        id_arr = tbl.column("id").to_numpy(zero_copy_only=False)
-        slides_all = tbl.column("slide").to_numpy(zero_copy_only=False)
-        home_all = tbl.column("is_home").to_numpy(zero_copy_only=False)
-        feats = tbl.column("features").combine_chunks()
-        flat = feats.flatten().to_numpy(zero_copy_only=False)
-        offs = feats.offsets.to_numpy(zero_copy_only=False)
-        widths = np.diff(offs)
-        if len(widths) and (widths == widths[0]).all():
-            X_all = flat.reshape(len(widths), int(widths[0])).astype(
-                np.float64, copy=False
-            )
-        else:  # ragged features: fall back to per-row assembly
-            X_all = np.stack(
-                [flat[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)]
-            ).astype(np.float64)
-        order = np.lexsort((id_arr, g_arr))
-        g_arr, id_arr = g_arr[order], id_arr[order]
-        slides_all = slides_all[order]
-        home_all = home_all[order]
-        X_all = X_all[order]
-        bounds = np.flatnonzero(np.concatenate(([True], g_arr[1:] != g_arr[:-1])))
-        bounds = np.append(bounds, len(g_arr))
-        parts: list[tuple[np.ndarray, ...]] = []
-        for b0, b1 in zip(bounds[:-1], bounds[1:]):
-            if b1 - b0 < 2:
+        g = tbl.column("g").to_numpy(zero_copy_only=False)
+        ids = tbl.column("id").to_numpy(zero_copy_only=False)
+        slides = tbl.column("slide").to_numpy(zero_copy_only=False)
+        X = list_matrix(tbl, "features", ids, dim).astype(np.float64, copy=False)
+        keys = list_matrix(tbl, "hk", ids) if "hk" in tbl.schema.names else None
+        order = np.lexsort((ids, g))
+        g, ids, slides, X = g[order], ids[order], slides[order], X[order]
+        if keys is not None:
+            keys = keys[order]
+        bounds = np.flatnonzero(np.diff(g)) + 1
+        out: list[tuple[np.ndarray, ...]] = []
+        for b0, b1 in zip(np.concatenate(([0], bounds)), np.concatenate((bounds, [len(g)]))):
+            s = slides[b0:b1]
+            gi = int(g[b0])
+            h0, h1 = np.searchsorted(s, [gi * ws + 1, (gi + 1) * ws + 1])
+            if h1 == h0:  # halo rows only: past the last block, or an id gap
                 continue
-            parts.extend(
-                _counts_emit(
-                    X_all[b0:b1], id_arr[b0:b1], slides_all[b0:b1],
-                    home_all[b0:b1], r2, max_gap,
-                )
-            )
-        if parts:
-            cols = [np.concatenate([p[k] for p in parts]) for k in range(5)]
+            plane = make_plane(X[b0:b1], None if keys is None else keys[b0:b1])
+            bins, arrival = slide_bins(plane, ids[b0:b1], s, int(h0), int(h1), ws)
+            ever_in, ever_out = slide_verdicts(bins, arrival, s[h0:h1], b_total, k)
+            out.append((ids[b0:b1][h0:h1], ever_in, ever_out))
+        if out:
             yield pa.RecordBatch.from_pydict(
                 {
-                    "i": pa.array(cols[0], type=pa.int64()),
-                    "slide_i": pa.array(cols[1], type=pa.int64()),
-                    "slide_j": pa.array(cols[2], type=pa.int64()),
-                    "c": pa.array(cols[3], type=pa.int64()),
-                    "c_arr": pa.array(cols[4], type=pa.int64()),
+                    "id": pa.array(np.concatenate([o[0] for o in out]), type=pa.int64()),
+                    "ever_inlier": pa.array(np.concatenate([o[1] for o in out])),
+                    "ever_outlier": pa.array(np.concatenate([o[2] for o in out])),
                 }
             )
 
-    sp = int(
-        points_with_slide.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
-    # no sortWithinPartitions: the kernel lexsorts its whole partition by
-    # (g, id) anyway, so a JVM sort before it is pure waste
-    return fanned.repartition(sp, "g").mapInArrow(emit, COUNT_SCHEMA)
+    return blocks.mapInArrow(emit, VERDICT_SCHEMA)
 
 
 def pairs_to_counts(pairs: DataFrame) -> DataFrame:
     """Adapt a raw neighbor-pair table (i, j, slide_i, slide_j — both
-    directions) to the count shape the detector consumes."""
+    directions) to slide-binned counts (i, slide_i, slide_j, c, c_arr)."""
     return pairs.groupBy("i", "slide_i", "slide_j").agg(
         F.count(F.lit(1)).alias("c"),
         F.sum(F.when(F.col("j") < F.col("i"), 1).otherwise(0)).alias("c_arr"),
     )
-
-
-def exact_neighbor_pairs(points_with_slide: DataFrame, cfg: DetectorConfig) -> DataFrame:
-    """All ordered pairs (i, j) with dist <= R that ever share a window.
-
-    Input: (id, features, slide). Output: (i, j, slide_i, slide_j), both
-    (p,q) and (q,p) for each unordered neighbor pair — downstream
-    aggregations are per neighbor-list owner ``i``.
-    """
-    ws = cfg.ws
-    r2 = float(cfg.r) * float(cfg.r)
-    max_gap = ws - 1
-
-    block = ((F.col("slide") - 1) / F.lit(ws)).cast("long")
-    base = points_with_slide.select("id", "features", "slide")
-    fanned = base.withColumn("g", block).withColumn("is_home", F.lit(True)).unionByName(
-        base.withColumn("g", block - 1)
-        .withColumn("is_home", F.lit(False))
-        .where(F.col("g") >= 0)
-    )
-
-    empty = pd.DataFrame(
-        {
-            "i": pd.Series(dtype="int64"),
-            "j": pd.Series(dtype="int64"),
-            "slide_i": pd.Series(dtype="int64"),
-            "slide_j": pd.Series(dtype="int64"),
-        }
-    )
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return empty
-        order = np.argsort(pdf["id"].to_numpy())
-        ids = pdf["id"].to_numpy()[order]
-        slides = pdf["slide"].to_numpy()[order]
-        home = pdf["is_home"].to_numpy()[order]
-        X = np.stack(pdf["features"].to_numpy()[order]).astype(np.float64)
-        return _pairwise_emit(X, ids, slides, home, r2, max_gap)
-
-    return fanned.groupBy("g").applyInPandas(emit, PAIR_SCHEMA)

@@ -33,12 +33,13 @@ phases (measured 1.3-4.5x wall swings on identical code+input, BENCH.md
 round-4 forensics), so a single best-of pair conflates the engine with the
 phase it sampled. The median protocol brackets EVERY leg with a pinned
 single-core memory-bandwidth probe (the contended resource per those same
-forensics); a rep's four probes must all fall within --probe-tol of the
+forensics); a rep's three probes must all fall within --probe-tol of the
 session's calibrated quiet-phase floor or the rep is discarded as
 phase-poisoned. It keeps interleaving (lo, hi, lo, hi, ...) until
 --target-pairs accepted reps exist (or --max-reps attempts), then reports
 the MEDIAN efficiency over accepted reps — a number a reviewer can re-run,
-not a record.
+not a record. When no rep is accepted it prints the result, appends nothing
+to BENCH.md and exits non-zero.
 """
 
 from __future__ import annotations
@@ -583,6 +584,12 @@ def main() -> None:
              "target": ">= 0.8 (median over accepted reps)"}
         )
         print(json.dumps(result))
+        if not result["reps_accepted"]:
+            # no median exists: record nothing rather than a None row
+            sys.exit(
+                f"0/{result['reps_run']} reps accepted "
+                f"(tol {probe_tol}); no row appended to BENCH.md"
+            )
         with open("BENCH.md", "a") as fh:
             fh.write(
                 f"\n| {n} (median protocol"

@@ -55,20 +55,33 @@ def test_spark_stats_match_reference(spark, gauss2d):
 
 
 @pytest.mark.parametrize(
-    "n,d,w,s,r,k,seed",
+    "n,d,w,s,r,k,seed,n_total,n_iso",
     [
-        (400, 1, 80, 20, 0.2, 3, 0),
-        (500, 3, 100, 25, 0.9, 4, 1),
-        (333, 2, 90, 30, 0.5, 2, 2),  # n not divisible by slide
-        (60, 2, 200, 50, 0.6, 3, 3),  # window never fills (n < W)
-        (250, 2, 50, 50, 0.5, 4, 4),  # tumbling window (S == W)
+        pytest.param(400, 1, 80, 20, 0.2, 3, 0, 0, 0, id="400-1-80-20-0.2-3-0"),
+        pytest.param(500, 3, 100, 25, 0.9, 4, 1, 500, 0, id="500-3-100-25-0.9-4-1"),
+        # n not divisible by slide
+        pytest.param(333, 2, 90, 30, 0.5, 2, 2, 0, 0, id="333-2-90-30-0.5-2-2"),
+        # window never fills (n < W)
+        pytest.param(60, 2, 200, 50, 0.6, 3, 3, 60, 0, id="60-2-200-50-0.6-3-3"),
+        # tumbling window (S == W): no halo at all
+        pytest.param(250, 2, 50, 50, 0.5, 4, 4, 0, 0, id="250-2-50-50-0.5-4-4"),
+        # ws = 30: a long slide-offset range per point
+        pytest.param(400, 2, 120, 4, 0.5, 4, 5, 400, 0, id="ws30"),
+        # far-flung, mutually distant points with no neighbor anywhere,
+        # with the stream length given and inferred
+        pytest.param(400, 2, 100, 20, 0.5, 4, 11, 400, 25, id="isolated-ntotal"),
+        pytest.param(400, 2, 120, 4, 0.5, 4, 11, 0, 25, id="isolated-ws30"),
+        # n = W+1: the last block holds a single point
+        pytest.param(401, 2, 400, 100, 0.5, 3, 6, 401, 0, id="last-block-one-point"),
     ],
 )
-def test_spark_matches_brute_random(spark, n, d, w, s, r, k, seed):
+def test_spark_matches_brute_random(spark, n, d, w, s, r, k, seed, n_total, n_iso):
     rng = np.random.default_rng(seed)
     X = rng.normal(0, 1, size=(n, d))
     X[rng.choice(n, size=max(1, n // 50), replace=False)] += 8.0
-    cfg = DetectorConfig(w=w, slide=s, r=r, k=k)
+    iso = rng.choice(n, size=n_iso, replace=False)
+    X[iso] += 50.0 + np.arange(n_iso)[:, None] * 17.0
+    cfg = DetectorConfig(w=w, slide=s, r=r, k=k, n_total=n_total)
     result = detect(to_points_df(spark, X), cfg)
     brute = mcod_brute(X, w=w, slide=s, r=r, k=k)
     got = [row.id for row in result.outliers.collect()]
@@ -77,6 +90,7 @@ def test_spark_matches_brute_random(spark, n, d, w, s, r, k, seed):
     assert stats.n_only_inlier == brute["n_only_inlier"]
     assert stats.n_only_outlier == brute["n_only_outlier"]
     assert stats.n_both_inlier_outlier == brute["n_both_inlier_outlier"]
+    assert stats.n_points == n
 
 
 def test_stats_sum_to_n(spark, gauss2d):
@@ -91,119 +105,51 @@ def test_stats_sum_to_n(spark, gauss2d):
     )
 
 
-def test_fused_per_point_equals_evaluation_aggregation(spark, gauss2d):
-    """per_point_verdicts (the fused scale path) must agree with the
-    explicit evaluation-row aggregation on every point."""
-    from approximate_anomaly_detection_in_data_streams_spark.operators.detector import (
-        evaluations,
-        per_point_verdicts,
-    )
-    from approximate_anomaly_detection_in_data_streams_spark.operators.pairs import (
-        exact_neighbor_counts,
-    )
-    from approximate_anomaly_detection_in_data_streams_spark.operators.windows import (
-        n_batches,
-        with_slide,
-    )
-    from pyspark.sql import functions as F
-
-    cfg = DetectorConfig(w=100, slide=20, r=0.5, k=8)
-    points = to_points_df(spark, gauss2d)
-    pts = with_slide(points, cfg)
-    b_total = n_batches(points, cfg)
-    counts = exact_neighbor_counts(pts, cfg)
-
-    evals = evaluations(pts, counts, cfg, b_total)
-    via_evals = {
-        r.id: (r.ever_inlier, r.ever_outlier)
-        for r in evals.groupBy("id")
-        .agg(
-            F.max(
-                F.when(F.col("kind") == "end", F.col("is_inlier")).otherwise(
-                    F.lit(False)
-                )
-            ).alias("ever_inlier"),
-            F.max(~F.col("is_inlier")).alias("ever_outlier"),
-        )
-        .collect()
-    }
-    fused = {
-        r.id: (r.ever_inlier, r.ever_outlier)
-        for r in per_point_verdicts(pts, counts, cfg, b_total).collect()
-    }
-    assert fused == via_evals
+def test_gapped_ids_invent_no_points(spark):
+    """Ids 1..200 without 57: the verdicts come from the input rows alone,
+    so a known stream length changes nothing — no phantom point 57."""
+    rng = np.random.default_rng(7)
+    X = rng.normal(0, 1, size=(200, 2))
+    rows = [(i + 1, [float(v) for v in X[i]]) for i in range(200) if i + 1 != 57]
+    points = spark.createDataFrame(rows, POINT_SCHEMA)
+    ids = {r[0] for r in rows}
+    runs = []
+    for n_total in (0, 200):
+        cfg = DetectorConfig(w=40, slide=10, r=0.6, k=4, n_total=n_total)
+        res = detect(points, cfg)
+        runs.append(([r.id for r in res.outliers.collect()], res.stats.first()))
+    (out0, stats0), (out200, stats200) = runs
+    assert out0 == out200
+    assert stats0 == stats200
+    assert stats0.n_points == len(rows)
+    assert set(out0) <= ids
 
 
-def test_pivoted_verdicts_equal_higher_order(spark, gauss2d):
-    """The unrolled conditional-sum verdict path must agree with the
-    higher-order array formulation on every point (same counts input).
-    ws=25 routes per_point_verdicts to the higher-order path, so this
-    compares the two implementations directly."""
-    from approximate_anomaly_detection_in_data_streams_spark.operators.detector import (
-        _per_point_verdicts_pivoted,
-        per_point_verdicts,
-    )
-    from approximate_anomaly_detection_in_data_streams_spark.operators.pairs import (
-        exact_neighbor_counts,
-    )
-    from approximate_anomaly_detection_in_data_streams_spark.operators.windows import (
-        n_batches,
-        with_slide,
-    )
+@pytest.mark.parametrize(
+    "rows,match",
+    [
+        # ragged widths: the kernel names the expected and found width
+        (
+            [(i, [0.1 * i, 0.2]) for i in range(1, 30)] + [(30, [1.0, 2.0, 3.0])],
+            "ragged features: expected width 2, found 3 at id 30",
+        ),
+        # a NaN distance compares false: without the check the point
+        # would silently become an outlier
+        (
+            [(i, [0.1 * i, float("nan") if i == 12 else 0.2]) for i in range(1, 31)],
+            "non-finite features at id 12",
+        ),
+        (
+            [(i, [float("inf") if i == 5 else 0.1 * i, 0.2]) for i in range(1, 31)],
+            "non-finite features at id 5",
+        ),
+    ],
+    ids=["ragged", "nan", "inf"],
+)
+def test_bad_features_fail_with_a_clear_message(spark, rows, match):
+    from approximate_anomaly_detection_in_data_streams_spark.api import run_detector
 
-    cfg = DetectorConfig(w=50, slide=2, r=0.5, k=4)  # ws=25 > the guard
-    points = to_points_df(spark, gauss2d)
-    pts = with_slide(points, cfg)
-    b_total = n_batches(points, cfg)
-    counts = exact_neighbor_counts(pts, cfg)
-
-    hof = {
-        r.id: (r.ever_inlier, r.ever_outlier)
-        for r in per_point_verdicts(pts, counts, cfg, b_total).collect()
-    }
-    piv = {
-        r.id: (r.ever_inlier, r.ever_outlier)
-        for r in _per_point_verdicts_pivoted(pts, counts, cfg, b_total).collect()
-    }
-    assert piv == hof
-
-
-def test_join_free_verdicts_equal_join_path(spark):
-    """per_point_verdicts with cfg.n_total (join-free zero-row union) must
-    equal the base-join fallback, including ISOLATED points (no count
-    rows anywhere) — the case the zero rows exist for. Exercises both the
-    pivoted (ws <= 24) and higher-order formulations."""
-    import dataclasses
-
-    from approximate_anomaly_detection_in_data_streams_spark.operators.detector import (
-        per_point_verdicts,
-    )
-    from approximate_anomaly_detection_in_data_streams_spark.operators.pairs import (
-        exact_neighbor_counts,
-    )
-    from approximate_anomaly_detection_in_data_streams_spark.operators.windows import (
-        n_batches,
-        with_slide,
-    )
-
-    rng = np.random.default_rng(11)
-    # dense cluster + far-flung isolated points sprinkled through the stream
-    X = rng.normal(0, 0.2, size=(400, 2))
-    iso = rng.integers(0, 400, size=25)
-    X[iso] += 50.0 + np.arange(len(iso))[:, None] * 17.0  # mutually distant
-    for w, s in ((100, 20), (120, 4)):  # ws=5 (pivoted) and ws=30 (array path)
-        cfg = DetectorConfig(w=w, slide=s, r=0.5, k=4)
-        points = to_points_df(spark, X)
-        pts = with_slide(points, cfg)
-        b_total = n_batches(points, cfg)
-        counts = exact_neighbor_counts(pts, cfg)
-        base = {
-            r.id: (r.ever_inlier, r.ever_outlier)
-            for r in per_point_verdicts(pts, counts, cfg, b_total).collect()
-        }
-        cfg_n = dataclasses.replace(cfg, n_total=len(X))
-        fused = {
-            r.id: (r.ever_inlier, r.ever_outlier)
-            for r in per_point_verdicts(pts, counts, cfg_n, b_total).collect()
-        }
-        assert fused == base, (w, s)
+    cfg = DetectorConfig(w=20, slide=10, r=0.5, k=2, dim=2, n_total=30)
+    res = run_detector(spark.createDataFrame(rows, POINT_SCHEMA), cfg)
+    with pytest.raises(Exception, match=f"ValueError: {match}"):
+        res.outliers.collect()

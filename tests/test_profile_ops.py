@@ -514,6 +514,31 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
     assert jobs == [], f"plan construction ran Spark jobs: {jobs}"
 
 
+@pytest.mark.parametrize("algorithm", ["mcod", "lshod"])
+def test_detector_verdicts_shuffle_once(spark, gauss_points, algorithm):
+    """Each halo block holds its home points' whole neighbourhood, so the
+    per-point verdicts need exactly ONE shuffle — the block repartition
+    hashpartitioning(g). A second exchange (a count table re-aggregated
+    per point id) must not come back."""
+    import re
+
+    from approximate_anomaly_detection_in_data_streams_spark.api import (
+        lshod_config,
+    )
+
+    if algorithm == "mcod":
+        cfg = DetectorConfig(w=100, slide=20, r=0.5, k=8, dim=2, n_total=2000)
+    else:
+        cfg = lshod_config(100, 20, 0.5, 8, dim=2, n_total=2000)
+    per_point = run_detector(gauss_points, cfg).per_point
+    per_point.collect()
+    plan = per_point._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan, without the initial one
+    exchanges = re.findall(r"Exchange (\w+)\((\w+)#", plan.toString())
+    assert exchanges == [("hashpartitioning", "g")], plan.toString()
+
+
 def test_simhash_fast_tier_preserves_hamming_geometry(spark):
     """The vectorized 'fast' shingle hash is a different member of the
     hash family than the portable md5 tier, but the hamming GEOMETRY must
