@@ -72,6 +72,18 @@ def with_bucket_key_ints(
     return points.withColumn("hk", F.array(*hs))
 
 
+def bucket_key_ints(X: np.ndarray, cfg: DetectorConfig) -> np.ndarray:
+    """(n, L*m) int64 — the NumPy twin of ``with_bucket_key_ints``: the same
+    seeded projections and the same left-to-right dot-product fold, so each
+    key equals the JVM expression's bit for bit."""
+    A, b = make_projections(cfg, X.shape[1])
+    A = A.reshape(-1, X.shape[1])  # table-major, like hk
+    dot = X[:, :1] * A[:, 0]
+    for d in range(1, X.shape[1]):
+        dot = dot + X[:, d : d + 1] * A[:, d]
+    return np.floor((dot + b.ravel()) / float(cfg.lsh_bucket_width)).astype(np.int64)
+
+
 def with_bucket_keys(
     points: DataFrame, cfg: DetectorConfig, dim: int
 ) -> DataFrame:
@@ -283,7 +295,7 @@ def lsh_dim(points: DataFrame, cfg: DetectorConfig) -> int:
 
 def lsh_plane(cfg: DetectorConfig):
     """Neighbor planes for the halo kernel (operators/pairs.py::
-    halo_verdicts): a pair is a neighbor iff it is within R AND collides
+    halo_verdicts) and the streaming SlideDetector: a pair is a neighbor iff it is within R AND collides
     in >= 1 of the L tables — the union of colliding buckets
     (reference src/core/lsh/LSHIndex.java:33-44) with no candidate
     multiset and no cross-table dedupe. Collision is one exact label plane
@@ -450,10 +462,10 @@ def _lsh_counts_bucketed(
         # p99 ~150 at sf0.1), so the former per-group loop paid ~100k
         # Python iterations of np.unique + slice-sum binning per dataset;
         # that loop overhead, not the plane flops, dominated the kernel
-        # (scripts/profile_lsh_kernel.py). Instead: expand every group's
-        # ordered index pairs with the segment repeat/arange trick, apply
-        # all predicates as flat vector passes, and accumulate count bins
-        # with one bincount keyed by (owner row, slide offset).
+        # (BENCH.md, "LSH detector: banded block kernel"). Instead: expand
+        # every group's ordered index pairs with the segment repeat/arange
+        # trick, apply all predicates as flat vector passes, and accumulate
+        # count bins with one bincount keyed by (owner row, slide offset).
         N = len(t_arr)
         sizes = np.diff(bounds)
         grp = np.cumsum(np.concatenate(([0], changed.astype(np.int64))))

@@ -46,20 +46,19 @@ CHUNK = 1024
 Plane = Callable[[int, int, int, int], np.ndarray]
 
 
-def list_matrix(tbl, name: str, ids: np.ndarray, width: int = 0) -> np.ndarray:
-    """An Arrow list column as one (rows, width) matrix — the input
-    contract at every detector kernel's edge.
-
-    The column reads as ONE flat buffer reshaped by its offsets (a per-row
-    object array costs more than the distance math itself). Every row must
-    have ``width`` values (the first row's width when 0), and float values
-    must be finite — a NaN distance compares false, so a NaN point would
-    silently become an outlier. Violations raise ValueError naming an
-    offending id.
+def checked_matrix(
+    flat: np.ndarray, widths: np.ndarray, ids: np.ndarray, name: str, width: int
+) -> np.ndarray:
+    """``flat`` row values with per-row ``widths`` as one (rows, width)
+    matrix — the input contract of both detector engines. Every row must
+    have ``width`` >= 1 values (the first row's width when 0), and floats
+    must be finite: zero-width points all coincide, and a NaN distance
+    compares false, so either would silently change verdicts. Violations
+    raise ValueError naming an offending id.
     """
-    col = tbl.column(name).combine_chunks()
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    widths = np.diff(col.offsets.to_numpy(zero_copy_only=False))
+    bad = np.flatnonzero(widths == 0)
+    if len(bad):
+        raise ValueError(f"empty {name} at id {int(ids[bad[0]])}: width must be >= 1")
     expected = width or (int(widths[0]) if len(widths) else 0)
     bad = np.flatnonzero(widths != expected)
     if len(bad):
@@ -76,6 +75,16 @@ def list_matrix(tbl, name: str, ids: np.ndarray, width: int = 0) -> np.ndarray:
                 f"{mat[bad[0]].tolist()}"
             )
     return mat
+
+
+def list_matrix(tbl, name: str, ids: np.ndarray, width: int = 0) -> np.ndarray:
+    """An Arrow list column as one ``checked_matrix``, read as ONE flat
+    buffer split by its offsets (a per-row object array costs more than
+    the distance math itself)."""
+    col = tbl.column(name).combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    widths = np.diff(col.offsets.to_numpy(zero_copy_only=False))
+    return checked_matrix(flat, widths, ids, name, width)
 
 
 def halo_blocks(points_with_slide: DataFrame, cfg: DetectorConfig) -> DataFrame:

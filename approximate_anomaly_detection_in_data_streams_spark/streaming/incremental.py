@@ -5,11 +5,14 @@ Two layers:
   * ``SlideDetector`` — an incremental engine processing one slide-sized
     batch at a time, mirroring the reference's driver loop
     (/root/reference/src/Executor.java:112-114: ingest S points, expire,
-    re-evaluate) with vectorized NumPy instead of per-point index
-    maintenance. State = the current window's points + per-point lifetime
-    flags; everything else is recomputed per batch (the event queue /
-    micro-cluster machinery exists only to speed up single-threaded
-    incrementality — SURVEY.md section 4).
+    re-evaluate). It runs the batch halo kernel's representation
+    (operators/pairs.py): state = the window's points plus each point's
+    neighbor counts binned by slide offset, and a slide costs S*W*d — the
+    new rows against the window (``slide_bins``) and the survivors against
+    the new rows, one bin each. A point's verdict is ``slide_verdicts`` over
+    its bins when its slide expires (or at the final flush); the event
+    queue / micro-cluster machinery exists only to speed up
+    single-threaded incrementality (SURVEY.md section 4).
   * ``run_structured_stream`` — Structured Streaming wrapper over the
     distributed keyed dataflow (streaming/keyed.py): state lives in
     Spark's state store via ``applyInPandasWithState``, one SlideDetector
@@ -26,145 +29,115 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from ..config import DetectorConfig
-
-
-@dataclass
-class _PointState:
-    ever_inlier: bool = False
-    ever_outlier: bool = False
+from ..operators.lsh import bucket_key_ints, lsh_plane
+from ..operators.pairs import (
+    CHUNK,
+    checked_matrix,
+    exact_plane,
+    slide_bins,
+    slide_verdicts,
+)
 
 
 @dataclass
 class SlideDetector:
-    """Incremental count-based sliding-window distance outlier detector."""
+    """Incremental count-based sliding-window distance outlier detector
+    (``mcod`` exact; ``lshod`` / ``approx_mclshod`` with the LSH plane).
+
+    ``dim`` fixes the feature width; 0 takes it from the first batch."""
 
     cfg: DetectorConfig
-    # window arrays (id-ascending)
-    _ids: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
-    _slides: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
-    _X: np.ndarray | None = None
-    _state: dict[int, _PointState] = field(default_factory=dict)
+    dim: int = 0
+    # the window, id-ascending: id, slide, features, (2ws-1) slide bins,
+    # arrival count (int32: a count never exceeds W) and, for the LSH
+    # variants, the L*m bucket ints
+    _win: dict[str, np.ndarray] = field(default_factory=dict)
     _outliers: set[int] = field(default_factory=set)
     _batch: int = 0
     _finalized: dict[str, int] = field(
-        default_factory=lambda: {"only_inlier": 0, "only_outlier": 0, "both": 0}
+        default_factory=lambda: dict.fromkeys(
+            ("n_only_inlier", "n_only_outlier", "n_both_inlier_outlier"), 0
+        )
     )
     # per-batch diagnostics (the reference's DIAG prints, K3 in SURVEY.md:
     # /root/reference/src/algorithms/MCOD.java:320-332): one dict per
     # processed batch with window population and work counters
     diagnostics: list[dict] = field(default_factory=list)
 
-    def _allowed(self, X: np.ndarray) -> np.ndarray | None:
-        """Candidate mask hook: (n, n) bool of pairs the detector may count
-        as neighbors, or None for the exact all-pairs semantics (MCOD).
-        LSHSlideDetector overrides with bucket-collision candidates."""
-        return None
+    def __post_init__(self) -> None:
+        algo = self.cfg.algorithm.lower()
+        if algo == "approx_mcod":
+            raise ValueError(
+                "approx_mcod has no slide-bin engine: stream it with "
+                "streaming/mcod_engine.py::MCODEngine, or run it in batch "
+                "with api.run_detector"
+            )
+        if algo not in ("mcod", "lshod", "approx_mclshod"):
+            raise ValueError(f"unknown algorithm: {self.cfg.algorithm}")
+        self._lsh = algo != "mcod"
 
-    def _counts(self, X: np.ndarray, ids: np.ndarray) -> np.ndarray:
-        """Neighbor counts (dist <= R) of each row among all rows, self
-        excluded — one blocked pairwise pass per batch."""
-        if len(ids) == 0:
-            return np.empty(0, dtype=np.int64)
-        r2 = float(self.cfg.r) ** 2
-        sq = np.einsum("ij,ij->i", X, X)
-        out = np.empty(len(ids), dtype=np.int64)
-        allowed = self._allowed(X)
-        chunk = 2048
-        for s in range(0, len(ids), chunk):
-            d2 = sq[s : s + chunk, None] + sq[None, :] - 2.0 * (X[s : s + chunk] @ X.T)
-            m = d2 <= r2
-            if allowed is not None:
-                m &= allowed[s : s + chunk]
-            m[np.arange(m.shape[0]), np.arange(s, s + m.shape[0])] = False
-            out[s : s + chunk] = m.sum(axis=1)
-        return out
+    def _finalize(self, rows: np.ndarray, b_total: int) -> None:
+        w = self._win
+        ever_in, ever_out = slide_verdicts(
+            w["bins"][rows], w["arrival"][rows], w["slide"][rows], b_total, self.cfg.k
+        )
+        self._finalized["n_only_inlier"] += int((ever_in & ~ever_out).sum())
+        self._finalized["n_only_outlier"] += int((ever_out & ~ever_in).sum())
+        self._finalized["n_both_inlier_outlier"] += int((ever_in == ever_out).sum())
+        self._outliers.update(w["id"][rows][~ever_in].tolist())
 
-    def _mark(self, ids: np.ndarray, counts: np.ndarray, end_eval: bool) -> None:
-        k = self.cfg.k
-        for pid, cnt in zip(ids.tolist(), counts.tolist()):
-            st = self._state[pid]
-            if cnt >= k:
-                if end_eval:
-                    st.ever_inlier = True
-            else:
-                st.ever_outlier = True
-
-    def _finalize(self, pid: int) -> None:
-        st = self._state.pop(pid)
-        if st.ever_inlier and not st.ever_outlier:
-            self._finalized["only_inlier"] += 1
-        elif st.ever_outlier and not st.ever_inlier:
-            self._finalized["only_outlier"] += 1
-        else:
-            self._finalized["both"] += 1
-        if not st.ever_inlier:
-            self._outliers.add(pid)
-
-    def process_batch(self, ids: np.ndarray, X: np.ndarray) -> None:
+    def process_batch(self, ids: np.ndarray, X) -> None:
         """Ingest one slide-sized batch (the reference's
         ProcessNewStreamObjects, /root/reference/src/algorithms/MCOD.java:302-317):
-        expire, pre-re-evaluate survivors, arrival-evaluate new points,
-        end-evaluate the full window."""
-        cfg = self.cfg
+        finalize the expiring slide, bin the new rows against the window,
+        and add the new slide's neighbors to each survivor's bin.
+        ``X`` is a (rows, dim) matrix or a sequence of rows."""
+        cfg, ws = self.cfg, self.cfg.ws
         self._batch += 1
         b = self._batch
         ids = np.asarray(ids, dtype=np.int64)
-        X = np.asarray(X, dtype=np.float64)
+        rows = [np.ravel(r) for r in X]
+        flat = np.concatenate([np.empty(0), *rows])
+        widths = np.array([len(r) for r in rows])
+        X = checked_matrix(flat, widths, ids, "features", self.dim)
+        self.dim = self.dim or X.shape[1]
+        new = {
+            "id": ids,
+            "slide": np.full(len(ids), b, dtype=np.int64),
+            "X": X,
+            "bins": np.zeros((len(ids), 2 * ws - 1), dtype=np.int32),
+            "arrival": np.zeros(len(ids), dtype=np.int32),
+        }
+        if self._lsh:
+            new["hk"] = bucket_key_ints(X, cfg)
 
-        # expiry: window after this batch holds slides [b-ws+1 .. b]
-        min_slide = b - cfg.ws + 1
-        if self._X is not None and len(self._ids):
-            expired = self._slides < min_slide
-            for pid in self._ids[expired].tolist():
-                self._finalize(pid)
-            keep = ~expired
-            self._ids = self._ids[keep]
-            self._slides = self._slides[keep]
-            self._X = self._X[keep]
+        # expiry: the window after this batch holds slides [b-ws+1 .. b],
+        # and the expiring slide's last evaluation was batch b-1
+        w = self._win
+        if w:
+            keep = w["slide"] > b - ws
+            self._finalize(~keep, b - 1)
+            if keep.any():
+                new = {f: np.concatenate([v[keep], new[f]]) for f, v in w.items()}
+        self._win = w = new
+        n = len(w["id"])
+        n_old = n - len(ids)
 
-            # pre re-evaluation of survivors (event-queue drain analog,
-            # /root/reference/src/algorithms/MCOD.java:228-261) — only
-            # meaningful when something expired
-            if b > 1:
-                counts = self._counts(self._X, self._ids)
-                self._mark(self._ids, counts, end_eval=False)
-
-        # arrival evaluations: new point vs survivors + earlier same-batch
-        for pid in ids.tolist():
-            self._state[pid] = _PointState()
-        if self._X is None or not len(self._ids):
-            win_X, win_ids = X, ids
-        else:
-            win_X = np.vstack([self._X, X])
-            win_ids = np.concatenate([self._ids, ids])
-        n_old = len(win_ids) - len(ids)
-        sq = np.einsum("ij,ij->i", win_X, win_X)
-        r2 = float(cfg.r) ** 2
-        k = cfg.k
-        allowed = self._allowed(win_X)
-        for i in range(len(ids)):
-            gi = n_old + i
-            d2 = sq[:gi] + sq[gi] - 2.0 * (win_X[:gi] @ win_X[gi])
-            ok = d2 <= r2
-            if allowed is not None:
-                ok &= allowed[gi, :gi]
-            cnt = int(ok.sum())
-            if cnt < k:
-                self._state[int(ids[i])].ever_outlier = True
-
-        # end evaluations for the whole window
-        self._ids = win_ids
-        self._slides = np.concatenate(
-            [self._slides, np.full(len(ids), b, dtype=np.int64)]
-        ) if n_old else np.full(len(ids), b, dtype=np.int64)
-        self._X = win_X
-        counts = self._counts(self._X, self._ids)
-        self._mark(self._ids, counts, end_eval=True)
+        plane = (lsh_plane if self._lsh else exact_plane)(cfg)(w["X"], w.get("hk"))
+        w["bins"][n_old:], w["arrival"][n_old:] = slide_bins(
+            plane, w["id"], w["slide"], n_old, n, ws
+        )
+        # survivors gain the new slide's neighbors at offset b - slide;
+        # rows = survivors, as in the halo kernel's orientation
+        for r0 in range(0, n_old, CHUNK):
+            r1 = min(r0 + CHUNK, n_old)
+            cnt = plane(r0, r1, n_old, n).sum(axis=1)
+            w["bins"][np.arange(r0, r1), b - w["slide"][r0:r1] + ws - 1] += cnt
         self.diagnostics.append(
             {
                 "batch": b,
-                "window_size": int(len(self._ids)),
-                "n_new": int(len(ids)),
+                "window_size": n,
+                "n_new": len(ids),
                 "n_outliers_recorded": len(self._outliers),
             }
         )
@@ -172,78 +145,23 @@ class SlideDetector:
     def finish(self) -> dict:
         """Stream exhausted: final flush (W4,
         /root/reference/src/core/OutlierDetector.java:43-47)."""
-        for pid in self._ids.tolist():
-            self._finalize(pid)
-        self._ids = np.empty(0, dtype=np.int64)
-        self._slides = np.empty(0, dtype=np.int64)
-        self._X = None
-        return {
-            "outliers": sorted(self._outliers),
-            "n_only_inlier": self._finalized["only_inlier"],
-            "n_only_outlier": self._finalized["only_outlier"],
-            "n_both_inlier_outlier": self._finalized["both"],
-        }
-
-
-@dataclass
-class LSHSlideDetector(SlideDetector):
-    """LSHOD variant of the incremental engine: neighbor counts are
-    restricted to pairs that collide in >= 1 of the L seeded p-stable LSH
-    tables (the reference's hash-table candidate union,
-    /root/reference/src/algorithms/LSHOD.java:85-103,
-    /root/reference/src/core/lsh/LSHIndex.java:33-44), with the exact
-    distance predicate applied to candidates only. Projections come from
-    the SAME ``make_projections(cfg, dim)`` seed as the batch path, and
-    each hash's dot product accumulates left-to-right over dims — the
-    identical IEEE op order as the batch path's JVM fold — so bucket keys
-    (and therefore the outlier set) are bit-equivalent to the batch LSHOD
-    detector (tests/test_streaming.py::test_lshod_slide_loop_matches_batch).
-    """
-
-    dim: int = 1
-
-    def __post_init__(self) -> None:
-        from ..operators.lsh import make_projections
-
-        self._A, self._b = make_projections(self.cfg, self.dim)
-        self._w = float(self.cfg.lsh_bucket_width)
-
-    def _allowed(self, X: np.ndarray) -> np.ndarray | None:
-        n = len(X)
-        L, m, d = self._A.shape
-        keys = np.empty((L, m, n), dtype=np.float64)
-        for t in range(L):
-            for i in range(m):
-                acc = X[:, 0] * self._A[t, i, 0]
-                for j in range(1, d):
-                    acc = acc + X[:, j] * self._A[t, i, j]
-                keys[t, i] = np.floor((acc + self._b[t, i]) / self._w)
-        coll = np.zeros((n, n), dtype=bool)
-        same = np.empty((n, n), dtype=bool)
-        for t in range(L):
-            kk = keys[t, 0]
-            np.equal(kk[:, None], kk[None, :], out=same)
-            for i in range(1, m):
-                kk = keys[t, i]
-                same &= kk[:, None] == kk[None, :]
-            coll |= same
-        return coll
+        if self._win:
+            self._finalize(np.ones(len(self._win["id"]), dtype=bool), self._batch)
+        self._win = {}
+        return {"outliers": sorted(self._outliers), **self._finalized}
 
 
 def make_slide_detector(cfg: DetectorConfig, dim: int) -> SlideDetector:
-    """Algorithm-routed incremental engine (mcod exact | lshod bucketed)."""
-    if cfg.algorithm == "lshod":
-        return LSHSlideDetector(cfg, dim=dim)
-    return SlideDetector(cfg)
+    """The incremental engine for ``cfg.algorithm`` (ValueError for
+    ``approx_mcod`` and unknown names); ``dim`` as in ``SlideDetector``."""
+    return SlideDetector(cfg, dim)
 
 
-def run_slide_loop(ids: np.ndarray, X: np.ndarray, cfg: DetectorConfig) -> dict:
+def run_slide_loop(ids: np.ndarray, X, cfg: DetectorConfig) -> dict:
     """Drive the incremental engine over a finite stream, slide by slide
-    (the reference's Executor main loop); algorithm-routed via
-    ``make_slide_detector``."""
-    det = make_slide_detector(cfg, int(np.asarray(X).shape[1]))
-    n = len(ids)
-    for start in range(0, n, cfg.slide):
+    (the reference's Executor main loop). ``X`` as in ``process_batch``."""
+    det = make_slide_detector(cfg, cfg.dim)
+    for start in range(0, len(ids), cfg.slide):
         det.process_batch(ids[start : start + cfg.slide], X[start : start + cfg.slide])
     return det.finish()
 

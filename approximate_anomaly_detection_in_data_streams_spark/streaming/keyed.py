@@ -2,9 +2,11 @@
 state held in Spark's state store via ``applyInPandasWithState``.
 
 This is the scale path for streaming detection: keys partition across
-executors, each key's state is exactly one ``SlideDetector`` (bounded by
-W x dim) plus an out-of-order re-sequencing buffer, and NO data ever
-flows through the driver — unlike the reference's single-threaded loop
+executors, each key's state is exactly one ``SlideDetector`` — the
+window's points plus their slide bins, bounded by W x (dim + 2ws-1), plus
+L*m bucket ints per point for the LSH variants — and an out-of-order
+re-sequencing buffer. A slide costs S*W*d, and NO data ever flows through
+the driver — unlike the reference's single-threaded loop
 (/root/reference/src/Executor.java:112-126), a thousand independent
 streams cost one shuffle by key.
 
@@ -43,21 +45,17 @@ STATE_SCHEMA = "blob binary"
 
 
 def _keyed_func(cfg: DetectorConfig):
-    """Build the applyInPandasWithState function (one detector per key).
-
-    The engine is algorithm-routed (``make_slide_detector``: exact MCOD or
-    LSH-bucketed LSHOD) and constructed LAZILY on the first data row so the
-    LSH variant can infer ``dim`` from the stream when ``cfg.dim`` is 0 —
-    the same inference the reference does by probing the first stream
-    object (/root/reference/src/core/Stream.java:16-22), paid once per key
-    instead of once per plan."""
+    """Build the applyInPandasWithState function (one detector per key,
+    ``make_slide_detector``; with ``cfg.dim`` 0 the engine takes the width
+    from its first batch, as the reference probes its first stream object,
+    reference src/core/Stream.java:16-22)."""
 
     def func(key, pdfs, state):
         if state.exists:
             st = pickle.loads(state.get[0])
         else:
             st = {
-                "det": None,
+                "det": make_slide_detector(cfg, cfg.dim),
                 "pending": {},
                 "next": 1,
                 "expected": None,
@@ -71,44 +69,25 @@ def _keyed_func(cfg: DetectorConfig):
                 else:
                     st["pending"][pid] = np.asarray(feats, dtype=np.float64)
 
-        if st["det"] is None:
-            if not st["pending"]:
-                # sentinel-only trigger before any data: nothing to process
-                state.update((pickle.dumps(st),))
-                return
-            dim = cfg.dim or len(next(iter(st["pending"].values())))
-            st["det"] = make_slide_detector(cfg, dim)
-
         det: SlideDetector = st["det"]
-        S = cfg.slide
-        # drain complete slides in order
+        rows = []
+        # drain complete slides in order; once the sentinel fixes the
+        # stream's end, the last slide may be partial and the final flush
+        # (W4) follows it
         while not st["done"]:
-            ids = list(range(st["next"], st["next"] + S))
+            stop = st["next"] + cfg.slide
+            if st["expected"] is not None:
+                stop = min(stop, st["expected"] + 1)
+            ids = list(range(st["next"], stop))
             if not all(i in st["pending"] for i in ids):
                 break
-            X = np.stack([st["pending"].pop(i) for i in ids])
-            det.process_batch(np.asarray(ids, dtype=np.int64), X)
-            st["next"] += S
-
-        rows = []
-        if (
-            st["expected"] is not None
-            and not st["done"]
-            and st["next"] <= st["expected"] + 1
-        ):
-            tail = list(range(st["next"], st["expected"] + 1))
-            if all(i in st["pending"] for i in tail):
-                if tail:
-                    X = np.stack([st["pending"].pop(i) for i in tail])
-                    det.process_batch(np.asarray(tail, dtype=np.int64), X)
-                    st["next"] = st["expected"] + 1
+            if ids:
+                det.process_batch(ids, [st["pending"].pop(i) for i in ids])
+                st["next"] = stop
+            if st["expected"] is not None and st["next"] > st["expected"]:
                 res = det.finish()
                 st["done"] = True
-                rows += [
-                    (key[0], "n_only_inlier", res["n_only_inlier"]),
-                    (key[0], "n_only_outlier", res["n_only_outlier"]),
-                    (key[0], "n_both_inlier_outlier", res["n_both_inlier_outlier"]),
-                ]
+                rows += [(key[0], k, v) for k, v in res.items() if k != "outliers"]
 
         # emit outliers recorded by expiry (or by the flush above) in THIS
         # trigger — streaming consumers see violations as soon as the
@@ -116,7 +95,7 @@ def _keyed_func(cfg: DetectorConfig):
         # and per-batch diagnostics are DRAINED from the pickled state:
         # both grow monotonically with stream length, and carrying them
         # would inflate the state blob every trigger even at a fixed
-        # window (state size must be bounded by W x dim + pending —
+        # window (state size must be bounded by the window + pending —
         # asserted in tests/test_streaming.py::test_keyed_state_size_flat).
         rows = [
             (key[0], "outlier", int(i)) for i in sorted(det._outliers)

@@ -143,8 +143,13 @@ def test_gapped_ids_invent_no_points(spark):
             [(i, [float("inf") if i == 5 else 0.1 * i, 0.2]) for i in range(1, 31)],
             "non-finite features at id 5",
         ),
+        # zero-width points would all coincide: every point an inlier
+        (
+            [(i, [] if i == 17 else [0.1 * i, 0.2]) for i in range(1, 31)],
+            "empty features at id 17",
+        ),
     ],
-    ids=["ragged", "nan", "inf"],
+    ids=["ragged", "nan", "inf", "empty"],
 )
 def test_bad_features_fail_with_a_clear_message(spark, rows, match):
     from approximate_anomaly_detection_in_data_streams_spark.api import run_detector
