@@ -81,7 +81,7 @@ class DetectorConfig:
         """
         if self.bucket_width > 0:
             return self.bucket_width
-        if self.algorithm == "approx_mclshod":
+        if self.algorithm.lower() == "approx_mclshod":
             return 1.5 * self.r
         return float(self.r)
 

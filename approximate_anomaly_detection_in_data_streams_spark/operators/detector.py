@@ -104,21 +104,25 @@ def batch_diagnostics(points: DataFrame, cfg: DetectorConfig) -> DataFrame:
     )
 
 
-def detect(points: DataFrame, cfg: DetectorConfig) -> DetectionResult:
+def detect(
+    points: DataFrame, cfg: DetectorConfig, unique_ids: bool = True
+) -> DetectionResult:
     """Run the exact (``mcod``) or LSH (``lshod``, ``approx_mclshod``)
     detector: one halo-block kernel emits every point's verdict, and the
-    outliers and lifetime stats are projections of that table."""
+    outliers and lifetime stats are projections of that table. A repeated
+    id raises ValueError unless ``unique_ids`` is False, in which case
+    each row counts as its own point."""
     pts = with_slide(points, cfg)
     b_total = n_batches(points, cfg)
     blocks = halo_blocks(pts, cfg)
     algo = cfg.algorithm.lower()
     if algo == "mcod":
-        per_point = halo_verdicts(blocks, cfg, b_total, exact_plane(cfg))
+        per_point = halo_verdicts(blocks, cfg, b_total, exact_plane(cfg), unique_ids)
     elif algo in ("lshod", "approx_mclshod"):
         # the L*m hash expressions run AFTER the g-shuffle, fused into the
         # (shuffle-partition-parallel) kernel stage
         keyed = with_bucket_key_ints(blocks, cfg, lsh_dim(pts, cfg))
-        per_point = halo_verdicts(keyed, cfg, b_total, lsh_plane(cfg))
+        per_point = halo_verdicts(keyed, cfg, b_total, lsh_plane(cfg), unique_ids)
     else:
         raise ValueError(f"unknown algorithm: {cfg.algorithm}")
     # sorted inside one partition: a range-partitioned orderBy would run a

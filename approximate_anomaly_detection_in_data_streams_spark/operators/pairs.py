@@ -77,6 +77,15 @@ def checked_matrix(
     return mat
 
 
+def check_unique_ids(ids: np.ndarray) -> None:
+    """Raise ValueError naming the first repeated id of the sorted ``ids``:
+    ids are the stream's time axis, so a repeated one is counted twice and
+    shifts every later slide."""
+    rep = np.flatnonzero(ids[1:] == ids[:-1])
+    if len(rep):
+        raise ValueError(f"duplicate id {int(ids[rep[0]])}: ids must be unique")
+
+
 def list_matrix(tbl, name: str, ids: np.ndarray, width: int = 0) -> np.ndarray:
     """An Arrow list column as one ``checked_matrix``, read as ONE flat
     buffer split by its offsets (a per-row object array costs more than
@@ -202,11 +211,13 @@ def halo_verdicts(
     cfg: DetectorConfig,
     b_total: int,
     make_plane: Callable[..., Plane],
+    unique_ids: bool,
 ) -> DataFrame:
     """(id, ever_inlier, ever_outlier) for every input point, from the
     ``halo_blocks`` layout. ``make_plane(X, keys)`` builds one block's
     neighbor plane from its id-sorted features and, when the frame carries
-    an ``hk`` column (the LSH variants), its hash-key matrix.
+    an ``hk`` column (the LSH variants), its hash-key matrix. With
+    ``unique_ids`` a repeated id raises ValueError (``check_unique_ids``).
 
     partition-scan (mapInArrow over the g-repartition), not per-group
     applyInPandas: a long stream has thousands of W-sized blocks and the
@@ -238,6 +249,8 @@ def halo_verdicts(
             h0, h1 = np.searchsorted(s, [gi * ws + 1, (gi + 1) * ws + 1])
             if h1 == h0:  # halo rows only: past the last block, or an id gap
                 continue
+            if unique_ids:
+                check_unique_ids(ids[b0:b1][h0:h1])
             plane = make_plane(X[b0:b1], None if keys is None else keys[b0:b1])
             bins, arrival = slide_bins(plane, ids[b0:b1], s, int(h0), int(h1), ws)
             ever_in, ever_out = slide_verdicts(bins, arrival, s[h0:h1], b_total, k)

@@ -27,8 +27,23 @@ def get_spark(
     ``cores`` controls local parallelism (``local[cores]``); default comes
     from $SPARK_GRAFT_CPUS, falling back to all cores. Shuffle partitions
     default to 2x cores — at cluster scale this would instead be sized from
-    input volume / target partition bytes; AQE coalesces the excess either
-    way.
+    input volume / target partition bytes. AQE coalesces the excess of
+    the shuffles Spark plans itself (joins, aggregations), but not of a
+    repartition that names its count: ``halo_blocks``'
+    ``repartition(sp, "g")`` runs the detector kernel in exactly ``sp``
+    tasks.
+
+    When this function builds the ``local[cores]`` master itself, the
+    Python workers are children of this driver's JVM, and they fork from
+    the package's own daemon (``pydaemon``, ``spark.python.daemon.module``)
+    instead of ``pyspark.daemon``: otherwise every Python task re-reads
+    ``pyspark.zip``'s central directory 16 times (CPython < 3.12) and
+    imports pyarrow, pandas and the kernel modules afresh. The package's
+    parent directory goes on ``spark.executorEnv.PYTHONPATH``, so the
+    daemon imports the package whatever the cwd. Under spark-submit or an
+    explicit master the stock daemon stays: workers there may import the
+    package only once ``--py-files`` arrive with a task, so no daemon can
+    import it before it forks.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -56,7 +71,12 @@ def get_spark(
     if master:
         builder = builder.master(master)
     elif "PYSPARK_GATEWAY_PORT" not in os.environ:
-        builder = builder.master(f"local[{cores}]")
+        package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = (
+            builder.master(f"local[{cores}]")
+            .config("spark.python.daemon.module", f"{__package__}.pydaemon")
+            .config("spark.executorEnv.PYTHONPATH", package_parent)
+        )
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -32,6 +32,7 @@ from ..config import DetectorConfig
 from ..operators.lsh import bucket_key_ints, lsh_plane
 from ..operators.pairs import (
     CHUNK,
+    check_unique_ids,
     checked_matrix,
     exact_plane,
     slide_bins,
@@ -96,6 +97,7 @@ class SlideDetector:
         self._batch += 1
         b = self._batch
         ids = np.asarray(ids, dtype=np.int64)
+        check_unique_ids(np.concatenate((self._win.get("id", ids[:0])[-1:], np.sort(ids))))
         rows = [np.ravel(r) for r in X]
         flat = np.concatenate([np.empty(0), *rows])
         widths = np.array([len(r) for r in rows])

@@ -181,7 +181,9 @@ def validate_images(
         "image_id", "ordinal", "features"
     )
     points = feats.select((F.col("ordinal") + 1).alias("id"), "features")
-    det = detect(points, cfg.drift)
+    # a duplicated image repeats its original's ordinal, and each row counts
+    # as a point (oracle/planted.py replays the same ids)
+    det = detect(points, cfg.drift, unique_ids=False)
     # unsorted anomaly rows feed the violation union (a union never
     # preserves order, so sorting there would only add a range exchange
     # + sampling job); the user-facing report DF sorts the tiny result

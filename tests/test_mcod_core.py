@@ -148,8 +148,13 @@ def test_gapped_ids_invent_no_points(spark):
             [(i, [] if i == 17 else [0.1 * i, 0.2]) for i in range(1, 31)],
             "empty features at id 17",
         ),
+        # a repeated id is counted twice (n_points 31) and shifts slides
+        (
+            [(i, [0.1 * i, 0.2]) for i in range(1, 31)] + [(11, [0.5, 0.2])],
+            "duplicate id 11",
+        ),
     ],
-    ids=["ragged", "nan", "inf", "empty"],
+    ids=["ragged", "nan", "inf", "empty", "duplicate-id"],
 )
 def test_bad_features_fail_with_a_clear_message(spark, rows, match):
     from approximate_anomaly_detection_in_data_streams_spark.api import run_detector

@@ -92,18 +92,20 @@ def batch_lshod_result(batch_run):
     return batch_run(LSHOD_CFG)
 
 
-@pytest.mark.parametrize("algorithm", ["lshod", "approx_mclshod"])
+@pytest.mark.parametrize("algorithm", ["lshod", "approx_mclshod", "APPROX_MCLSHOD"])
 def test_lshod_slide_loop_matches_batch(gauss2d, batch_run, algorithm):
     """The incremental engine on the LSH plane (bucket ints from the same
     seeded projections and left-to-right dot-product fold as the batch JVM
     expressions, computed once per point at arrival) must reproduce the
     batch detector exactly — outlier set and lifetime stats (VERDICT r4
-    #8). approx_mclshod has its own bucket width and hash count."""
+    #8). approx_mclshod has its own bucket width and hash count, whatever
+    the name's case."""
     cfg = replace(LSHOD_CFG, algorithm=algorithm)
     outliers, stats = batch_run(cfg)
     ids = np.arange(1, len(gauss2d) + 1)
     res = run_slide_loop(ids, gauss2d, cfg)
     assert res["outliers"] == outliers
+    assert outliers == batch_run(replace(cfg, algorithm=algorithm.lower()))[0]
     assert res["n_only_inlier"] == stats["n_only_inlier"]
     assert res["n_only_outlier"] == stats["n_only_outlier"]
     assert res["n_both_inlier_outlier"] == stats["n_both_inlier_outlier"]
@@ -348,21 +350,26 @@ def test_slide_engine_routes_every_algorithm_name(gauss2d):
         ("inf", "non-finite features at id 31"),
         ("width-change", "ragged features: expected width 2, found 3 at id 41"),
         ("empty", "empty features at id 1"),
+        ("duplicate-id", "duplicate id 20"),
     ],
-    ids=["nan", "inf", "width-change", "empty"],
+    ids=["nan", "inf", "width-change", "empty", "duplicate-id"],
 )
 def test_bad_stream_features_fail_with_a_clear_message(gauss2d, case, match):
     """The stream's input contract is the batch kernel's (pairs.py::
-    checked_matrix): without it a NaN point silently becomes an outlier and
-    zero-width points all coincide."""
+    checked_matrix, check_unique_ids): without it a NaN point silently
+    becomes an outlier, zero-width points all coincide and a repeated id
+    misaligns every later slide."""
     rows = [list(x) for x in gauss2d[:60]]
+    ids = np.arange(1, len(rows) + 1)
     if case == "nan":
         rows[7][1] = float("nan")
     elif case == "inf":
         rows[30][0] = float("inf")
     elif case == "width-change":
         rows[40:] = [r + [0.0] for r in rows[40:]]
+    elif case == "duplicate-id":
+        ids[20] = 20  # the second slide repeats the first slide's last id
     else:
         rows = [[] for _ in rows]
     with pytest.raises(ValueError, match=match):
-        run_slide_loop(np.arange(1, len(rows) + 1), rows, CFG)
+        run_slide_loop(ids, rows, CFG)
