@@ -38,21 +38,26 @@ def get_spark(
     the package's own daemon (``pydaemon``, ``spark.python.daemon.module``)
     instead of ``pyspark.daemon``: otherwise every Python task re-reads
     ``pyspark.zip``'s central directory 16 times (CPython < 3.12) and
-    imports pyarrow, pandas and the kernel modules afresh. The package's
-    parent directory goes on ``spark.executorEnv.PYTHONPATH``, so the
-    daemon imports the package whatever the cwd. Under spark-submit or an
-    explicit master the stock daemon stays: workers there may import the
-    package only once ``--py-files`` arrive with a task, so no daemon can
-    import it before it forks.
+    imports pyarrow, pandas and the kernel modules afresh. That daemon
+    also ends every task with a heap trim, so an idle worker gives back
+    the memory its last task hoarded. The package's parent directory goes
+    on ``spark.executorEnv.PYTHONPATH``, so the daemon imports the package
+    whatever the cwd. Under spark-submit or an explicit master the stock
+    daemon stays: workers there may import the package only once
+    ``--py-files`` arrive with a task, so no daemon can import it before
+    it forks.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
-    # Keep glibc from returning large buffers to the kernel between Arrow
-    # batches: concurrent mmap/page-fault storms are pathologically slow on
-    # virtualized guests, and the Python workers re-allocate per batch.
-    # (Workers inherit this env through the JVM -> daemon fork chain.)
+    # Within a task, keep glibc from returning large buffers to the kernel
+    # between Arrow batches: concurrent mmap/page-fault storms are
+    # pathologically slow on virtualized guests, and the Python workers
+    # re-allocate per batch. The heap so hoarded is handed back at the end
+    # of each task: the package daemon (pydaemon) trims it, so an idle
+    # worker does not keep its last task's peak. (Workers inherit this env
+    # through the JVM -> daemon fork chain.)
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
     # ...and route Arrow allocations through that hoarding glibc pool

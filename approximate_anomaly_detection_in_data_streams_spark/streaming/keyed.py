@@ -66,6 +66,10 @@ def _keyed_func(cfg: DetectorConfig):
                 pid = int(pid)
                 if pid < 0:
                     st["expected"] = -pid
+                elif pid < st["next"] or pid in st["pending"]:
+                    # ids are the time axis (pairs.py::check_unique_ids):
+                    # a repeat would replace the pending row, or never drain
+                    raise ValueError(f"duplicate id {pid}: ids must be unique")
                 else:
                     st["pending"][pid] = np.asarray(feats, dtype=np.float64)
 

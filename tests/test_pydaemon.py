@@ -1,9 +1,12 @@
-"""The package's PySpark daemon: zip archives re-read only when they change,
-and the local test session's workers fork from it."""
+"""The package's PySpark daemon: PySpark imported byte-compiled, zip
+archives re-read only when they change, idle workers trimmed, and the local
+test session's workers fork from it."""
 
 from __future__ import annotations
 
+import ctypes
 import importlib
+import os
 import sys
 import zipfile
 import zipimport
@@ -63,3 +66,62 @@ def test_local_session_workers_fork_from_the_package_daemon(spark):
     assert {tuple(r) for r in rows.collect()} == {
         (pydaemon.__name__, "_invalidate_if_changed")
     }
+
+
+@pytest.mark.parametrize(
+    "site_version,archive_kept", [("4.1.2", False), ("4.0.0", True)],
+    ids=["same-version", "other-version"],
+)
+def test_byte_compiled_pyspark_replaces_only_a_same_version_archive(
+    tmp_path, site_version, archive_kept
+):
+    archive = tmp_path / "pyspark.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("pyspark/version.py", "__version__: str = '4.1.2'\n")
+    site = tmp_path / "site-packages"
+    (site / "pyspark").mkdir(parents=True)
+    (site / "pyspark" / "version.py").write_text(f'__version__ = "{site_version}"\n')
+    path = [str(tmp_path), str(archive), str(tmp_path / "py4j.zip"), str(site)]
+    want = list(path) if archive_kept else [p for p in path if p != str(archive)]
+    pydaemon.prefer_compiled_pyspark(path)
+    assert path == want
+
+
+@pytest.mark.skipif(
+    not hasattr(ctypes.CDLL(None), "malloc_trim"), reason="the C library has no malloc_trim"
+)
+def test_idle_workers_return_a_task_heap(spark):
+    """The session's MALLOC_TRIM_THRESHOLD_ lets a task hoard 256 MB of
+    freed heap; the daemon trims it when the task ends, so an idle worker
+    holds about its forked size, not its last task's peak."""
+
+    def allocate(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        total = float(np.ones(32 * 2**20).sum())
+        yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "total": [total]})
+
+    def rss(batches):
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        with open("/proc/self/status") as fh:
+            kb = next(int(line.split()[1]) for line in fh if line.startswith("VmRSS"))
+        yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "rss_mb": [kb / 1024]})
+
+    big = spark.range(4, numPartitions=4).mapInArrow(allocate, "pid long, total double")
+    allocated = {r.pid for r in big.collect()}
+    idle = spark.range(4, numPartitions=4).mapInArrow(rss, "pid long, rss_mb double")
+    # Spark hands out idle workers oldest first, and earlier tests may
+    # have left more than four: probe until an allocating worker answers
+    probed = {}
+    for _ in range(4):
+        probed.update((r.pid, r.rss_mb) for r in idle.collect())
+        if allocated & set(probed):
+            break
+    assert allocated & set(probed), "the probe reached none of the allocating workers"
+    assert max(probed.values()) < 200, probed

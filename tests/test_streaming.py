@@ -330,6 +330,50 @@ def test_keyed_state_size_flat():
     assert max(steady) - min(steady) <= 0.1 * min(steady), sizes[:8] + sizes[-3:]
 
 
+class _FakeState:
+    """The slice of Spark's GroupState that ``_keyed_func`` uses."""
+
+    blob = None
+
+    @property
+    def exists(self):
+        return self.blob is not None
+
+    @property
+    def get(self):
+        return (self.blob,)
+
+    def update(self, t):
+        self.blob = t[0]
+
+
+@pytest.mark.parametrize(
+    "batches,dup",
+    [([range(1, 41), [11, -40]], 11), ([[1, 2, 3], [3]], 3)],
+    ids=["after-its-slide", "while-pending"],
+)
+def test_keyed_stream_rejects_a_repeated_id(batches, dup):
+    """A repeated id fails as in the batch kernel (check_unique_ids):
+    without the check a pending repeat silently replaced the earlier row,
+    and a repeat of a processed id stayed in the pickled state for ever
+    while the stream reported itself done."""
+    import pandas as pd
+
+    from approximate_anomaly_detection_in_data_streams_spark.streaming.keyed import (
+        _keyed_func,
+    )
+
+    func = _keyed_func(DetectorConfig(w=10, slide=5, r=0.5, k=2))
+    state = _FakeState()
+    rng = np.random.default_rng(0)
+    with pytest.raises(ValueError, match=f"duplicate id {dup}: ids must be unique"):
+        for ids in batches:
+            pdf = pd.DataFrame(
+                {"id": list(ids), "features": [[float(rng.normal())] for _ in ids]}
+            )
+            list(func(("k",), iter([pdf]), state))
+
+
 def test_slide_engine_routes_every_algorithm_name(gauss2d):
     """Algorithm names route case-insensitively, as in the batch detect();
     approx_mcod and unknown names fail instead of silently running exact
