@@ -174,10 +174,10 @@ def q_mcod_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lshod_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded LSH approximate detector (J4/X3). The p-stable bucket keys
-    are pure JVM expressions with the seeded Gaussian coefficients as
-    float literals (operators/lsh.py), so the SQL twin re-derives
-    bit-identical keys from the same literals — the approximate LSH
-    detector is exactly oracle-checked end to end."""
+    are a fixed left-to-right fold over the seeded Gaussian coefficients
+    (operators/lsh.py::bucket_key_ints), so the SQL twin re-derives
+    bit-identical keys from the same coefficients as float literals — the
+    approximate LSH detector is exactly oracle-checked end to end."""
     return _detection(spark, sf_dir, "lshod").outliers
 
 
@@ -954,11 +954,12 @@ group by n.id order by n.id
 
 
 def _lshod_outliers_sql(algorithm: str = "lshod") -> str:
-    """SQL twin of the LSHOD / ApproxMCLSHOD detectors: identical bucket
-    keys from the same float-literal projections (bit-identical IEEE ops
-    in both engines), candidate equi-join per table with the co-window
-    band, exact distance filter, then the standard end-evaluation outlier
-    CTE."""
+    """SQL twin of the LSHOD / ApproxMCLSHOD detectors: the bucket keys
+    replay the NumPy fold of operators/lsh.py::bucket_key_ints as float
+    literals (value * a + b, / w, floor: the same IEEE operations, so
+    bit-identical keys), then a candidate equi-join per table with the
+    co-window band, the exact distance filter and the standard
+    end-evaluation outlier CTE."""
     from approximate_anomaly_detection_in_data_streams_spark.operators.lsh import (
         make_projections,
     )

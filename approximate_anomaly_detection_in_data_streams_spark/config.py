@@ -12,7 +12,7 @@ nondeterministic; our engine is always seeded and reproducible.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -84,16 +84,3 @@ class DetectorConfig:
         if self.algorithm.lower() == "approx_mclshod":
             return 1.5 * self.r
         return float(self.r)
-
-
-@dataclass(frozen=True)
-class ValidatorConfig:
-    """Configuration of the table-validation superset (SURVEY.md section 7 M3)."""
-
-    partition_col: str = "fmt"
-    unique_cols: tuple[str, ...] = ("image_id",)
-    phash_dup_threshold: int = 8  # max rows sharing one phash before flagging
-    null_rate_limit: float = 0.02
-    detector: DetectorConfig | None = None
-    checkpoint_dir: str | None = None
-    seed: int = 42

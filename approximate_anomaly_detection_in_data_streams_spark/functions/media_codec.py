@@ -24,8 +24,6 @@ import numpy as np
 MAGIC_AUDIO = b"AADA"
 MAGIC_VIDEO = b"AADV"
 
-EXTERNAL_FORMATS = ("wav", "mp3", "flac", "mp4", "webm", "mkv")
-
 
 class MediaDecodeError(ValueError):
     """Raised when media bytes are malformed/truncated."""

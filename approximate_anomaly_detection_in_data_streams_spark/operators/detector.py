@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
-from .lsh import lsh_dim, lsh_plane, with_bucket_key_ints
+from .lsh import lsh_plane
 from .pairs import exact_plane, halo_blocks, halo_verdicts
 from .windows import n_batches, with_slide
 
@@ -117,14 +117,12 @@ def detect(
     blocks = halo_blocks(pts, cfg)
     algo = cfg.algorithm.lower()
     if algo == "mcod":
-        per_point = halo_verdicts(blocks, cfg, b_total, exact_plane(cfg), unique_ids)
+        make_plane = exact_plane(cfg)
     elif algo in ("lshod", "approx_mclshod"):
-        # the L*m hash expressions run AFTER the g-shuffle, fused into the
-        # (shuffle-partition-parallel) kernel stage
-        keyed = with_bucket_key_ints(blocks, cfg, lsh_dim(pts, cfg))
-        per_point = halo_verdicts(keyed, cfg, b_total, lsh_plane(cfg), unique_ids)
+        make_plane = lsh_plane(cfg)
     else:
         raise ValueError(f"unknown algorithm: {cfg.algorithm}")
+    per_point = halo_verdicts(blocks, cfg, b_total, make_plane, unique_ids)
     # sorted inside one partition: a range-partitioned orderBy would run a
     # sampling job that recomputes the whole kernel stage first
     outliers = (

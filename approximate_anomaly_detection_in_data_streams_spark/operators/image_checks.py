@@ -32,14 +32,7 @@ CHECK_SCHEMA = (
     "psnr double, is_violation boolean, reason string"
 )
 
-FEATURE_SCHEMA = "image_id string, ordinal long, features array<double>"
 N_HIST_BINS = 8
-
-
-# check rows + stored-phash passthrough + ordinal + drift features; the
-# phash column lets uniqueness/duplicate-group sinks aggregate these
-# persisted narrow rows instead of re-scanning the source table
-COMBINED_SCHEMA = CHECK_SCHEMA + ", phash long, ordinal long, features array<double>"
 
 DIGEST_SCHEMA = (
     "image_id string, fmt string, caption string, ordinal long, "

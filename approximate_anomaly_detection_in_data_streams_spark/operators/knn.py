@@ -94,7 +94,7 @@ def srp_bucket_keys(
     order: IEEE addition is deterministic for a fixed order, so an oracle
     re-deriving the dots as an explicit SQL sum over the same float
     literals sees bit-identical signs — the same portability trick as the
-    LSHOD bucket keys (operators/lsh.py::with_bucket_keys). Still fully
+    LSHOD bucket keys (operators/lsh.py::bucket_key_ints). Still fully
     vectorized: dim in-place (n x tables*bits) multiply-adds.
     """
     A = srp_projections(dim, bits, tables, seed)

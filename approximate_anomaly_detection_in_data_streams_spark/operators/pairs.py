@@ -118,12 +118,12 @@ def halo_blocks(points_with_slide: DataFrame, cfg: DetectorConfig) -> DataFrame:
     return fanned.repartition(sp, "g")
 
 
-def exact_plane(cfg: DetectorConfig) -> Callable[..., Plane]:
+def exact_plane(cfg: DetectorConfig) -> Callable[[np.ndarray], Plane]:
     """Exact neighbor planes: squared distance via ||a||^2 + ||b||^2 - 2a.b
     — the arithmetic the SQL oracle twins reproduce bit-for-bit."""
     r2 = float(cfg.r) * float(cfg.r)
 
-    def make(X: np.ndarray, _keys) -> Plane:
+    def make(X: np.ndarray) -> Plane:
         sq = np.einsum("ij,ij->i", X, X)
 
         def plane(r0: int, r1: int, c0: int, c1: int) -> np.ndarray:
@@ -210,14 +210,14 @@ def halo_verdicts(
     blocks: DataFrame,
     cfg: DetectorConfig,
     b_total: int,
-    make_plane: Callable[..., Plane],
+    make_plane: Callable[[np.ndarray], Plane],
     unique_ids: bool,
 ) -> DataFrame:
     """(id, ever_inlier, ever_outlier) for every input point, from the
-    ``halo_blocks`` layout. ``make_plane(X, keys)`` builds one block's
-    neighbor plane from its id-sorted features and, when the frame carries
-    an ``hk`` column (the LSH variants), its hash-key matrix. With
-    ``unique_ids`` a repeated id raises ValueError (``check_unique_ids``).
+    ``halo_blocks`` layout. ``make_plane(X)`` builds one block's neighbor
+    plane from its id-sorted features (``exact_plane`` or operators/lsh.py::
+    ``lsh_plane``, which hashes the block itself). With ``unique_ids`` a
+    repeated id raises ValueError (``check_unique_ids``).
 
     partition-scan (mapInArrow over the g-repartition), not per-group
     applyInPandas: a long stream has thousands of W-sized blocks and the
@@ -236,11 +236,8 @@ def halo_verdicts(
         ids = tbl.column("id").to_numpy(zero_copy_only=False)
         slides = tbl.column("slide").to_numpy(zero_copy_only=False)
         X = list_matrix(tbl, "features", ids, dim).astype(np.float64, copy=False)
-        keys = list_matrix(tbl, "hk", ids) if "hk" in tbl.schema.names else None
         order = np.lexsort((ids, g))
         g, ids, slides, X = g[order], ids[order], slides[order], X[order]
-        if keys is not None:
-            keys = keys[order]
         bounds = np.flatnonzero(np.diff(g)) + 1
         out: list[tuple[np.ndarray, ...]] = []
         for b0, b1 in zip(np.concatenate(([0], bounds)), np.concatenate((bounds, [len(g)]))):
@@ -251,7 +248,7 @@ def halo_verdicts(
                 continue
             if unique_ids:
                 check_unique_ids(ids[b0:b1][h0:h1])
-            plane = make_plane(X[b0:b1], None if keys is None else keys[b0:b1])
+            plane = make_plane(X[b0:b1])
             bins, arrival = slide_bins(plane, ids[b0:b1], s, int(h0), int(h1), ws)
             ever_in, ever_out = slide_verdicts(bins, arrival, s[h0:h1], b_total, k)
             out.append((ids[b0:b1][h0:h1], ever_in, ever_out))
@@ -265,12 +262,3 @@ def halo_verdicts(
             )
 
     return blocks.mapInArrow(emit, VERDICT_SCHEMA)
-
-
-def pairs_to_counts(pairs: DataFrame) -> DataFrame:
-    """Adapt a raw neighbor-pair table (i, j, slide_i, slide_j — both
-    directions) to slide-binned counts (i, slide_i, slide_j, c, c_arr)."""
-    return pairs.groupBy("i", "slide_i", "slide_j").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum(F.when(F.col("j") < F.col("i"), 1).otherwise(0)).alias("c_arr"),
-    )

@@ -10,7 +10,6 @@ the reference where ids are assigned at ingest starting from 1
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 POINT_SCHEMA = T.StructType(
@@ -48,23 +47,3 @@ def load_stream_csv(
         return (idx + 1, [float(c) for c in cells])
 
     return spark.createDataFrame(rdd.map(parse), POINT_SCHEMA)
-
-
-def points_from_columns(
-    df: DataFrame, order_col: str, feature_cols: list[str]
-) -> DataFrame:
-    """Project an arbitrary table into ``(id, features)``.
-
-    ``order_col`` defines arrival order (must be unique); ``feature_cols``
-    are cast to double and packed into the feature vector. The global
-    ``row_number`` is a single total-order sort — at 100 TB one would
-    instead carry a pre-assigned dense id; for the stream tables here the
-    sort is on an already-sorted column and cheap.
-    """
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col(order_col))
-    return df.select(
-        F.row_number().over(w).cast("long").alias("id"),
-        F.array(*[F.col(c).cast("double") for c in feature_cols]).alias("features"),
-    )

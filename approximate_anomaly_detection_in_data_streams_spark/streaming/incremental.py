@@ -29,7 +29,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from ..config import DetectorConfig
-from ..operators.lsh import bucket_key_ints, lsh_plane
+from ..operators.lsh import lsh_plane
 from ..operators.pairs import (
     CHUNK,
     check_unique_ids,
@@ -49,9 +49,8 @@ class SlideDetector:
 
     cfg: DetectorConfig
     dim: int = 0
-    # the window, id-ascending: id, slide, features, (2ws-1) slide bins,
-    # arrival count (int32: a count never exceeds W) and, for the LSH
-    # variants, the L*m bucket ints
+    # the window, id-ascending: id, slide, features, (2ws-1) slide bins
+    # and arrival count (int32: a count never exceeds W)
     _win: dict[str, np.ndarray] = field(default_factory=dict)
     _outliers: set[int] = field(default_factory=set)
     _batch: int = 0
@@ -110,8 +109,6 @@ class SlideDetector:
             "bins": np.zeros((len(ids), 2 * ws - 1), dtype=np.int32),
             "arrival": np.zeros(len(ids), dtype=np.int32),
         }
-        if self._lsh:
-            new["hk"] = bucket_key_ints(X, cfg)
 
         # expiry: the window after this batch holds slides [b-ws+1 .. b],
         # and the expiring slide's last evaluation was batch b-1
@@ -125,7 +122,9 @@ class SlideDetector:
         n = len(w["id"])
         n_old = n - len(ids)
 
-        plane = (lsh_plane if self._lsh else exact_plane)(cfg)(w["X"], w.get("hk"))
+        # the LSH plane re-hashes the window: W*L*m*d multiply-adds, small
+        # next to its per-table np.unique labelling
+        plane = (lsh_plane if self._lsh else exact_plane)(cfg)(w["X"])
         w["bins"][n_old:], w["arrival"][n_old:] = slide_bins(
             plane, w["id"], w["slide"], n_old, n, ws
         )

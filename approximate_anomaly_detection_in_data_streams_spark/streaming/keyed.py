@@ -3,10 +3,10 @@ state held in Spark's state store via ``applyInPandasWithState``.
 
 This is the scale path for streaming detection: keys partition across
 executors, each key's state is exactly one ``SlideDetector`` — the
-window's points plus their slide bins, bounded by W x (dim + 2ws-1), plus
-L*m bucket ints per point for the LSH variants — and an out-of-order
-re-sequencing buffer. A slide costs S*W*d, and NO data ever flows through
-the driver — unlike the reference's single-threaded loop
+window's points plus their slide bins, bounded by W x (dim + 2ws-1) for
+every algorithm — and an out-of-order re-sequencing buffer. A slide
+costs S*W*d, and NO data ever flows through the driver — unlike the
+reference's single-threaded loop
 (/root/reference/src/Executor.java:112-126), a thousand independent
 streams cost one shuffle by key.
 

@@ -478,9 +478,11 @@ def test_minhash_null_and_empty_text(spark):
 
 
 def test_plan_build_runs_no_jobs(spark, sf_dir):
-    """With dim and n_total carried in DetectorConfig, constructing every
-    detector query plan must trigger ZERO Spark jobs (no driver-blocking
-    agg/first at plan-build time). Asserted via a dedicated job group."""
+    """With n_total carried in DetectorConfig, constructing every detector
+    query plan must trigger ZERO Spark jobs (no driver-blocking agg/first
+    at plan-build time), whether or not dim is given: the LSH variants
+    hash inside the kernel, so their plans need no feature-width probe.
+    Asserted via a dedicated job group."""
     from approximate_anomaly_detection_in_data_streams_spark.api import (
         approx_mclshod_config,
         lshod_config,
@@ -501,6 +503,8 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
             DetectorConfig(w=400, slide=100, r=15.0, k=10, dim=1, n_total=n),
             lshod_config(400, 100, 15.0, 10, dim=1, n_total=n),
             approx_mclshod_config(400, 100, 15.0, 10, dim=1, n_total=n),
+            lshod_config(400, 100, 15.0, 10, dim=0, n_total=n),
+            approx_mclshod_config(400, 100, 15.0, 10, dim=0, n_total=n),
             DetectorConfig(
                 w=400, slide=100, r=15.0, k=10, algorithm="approx_mcod",
                 pd_limit=300, ar_factor=0.3, dim=1, n_total=n,
