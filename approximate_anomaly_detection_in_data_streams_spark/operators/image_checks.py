@@ -25,13 +25,6 @@ from ..functions import image_codec as codec
 
 PSNR_MIN_DB = 40.0
 
-CHECK_SCHEMA = (
-    "image_id string, fmt string, w int, h int, n_bytes long, "
-    "decode_ok boolean, dims_ok boolean, "
-    "phash_ok boolean, pixels_ok boolean, caption_ok boolean, "
-    "psnr double, is_violation boolean, reason string"
-)
-
 N_HIST_BINS = 8
 
 DIGEST_SCHEMA = (
@@ -726,8 +719,10 @@ def row_checks_and_features(
        own LSH variants make the same sketch-then-verify trade,
        /root/reference/src/core/lsh/LSHIndex.java:33-44).
 
-    Output schema matches the exhaustive path (CHECK_SCHEMA + ordinal,
-    features); ``psnr`` is NaN where the digest agreed (not computed).
+    Output columns, with or without ``reference``: image_id, fmt, w, h,
+    n_bytes, decode_ok, dims_ok, phash_ok, pixels_ok, caption_ok, psnr,
+    is_violation, reason, phash, ordinal, features; ``psnr`` is NaN where
+    the digest agreed (not computed).
 
     ``payload_path`` requires ``images`` to be the UNFILTERED read of that
     parquet directory (digests come from the raw files; a filtered or

@@ -4,7 +4,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from . import class_archive
 
 
 def get_spark(
@@ -46,6 +49,23 @@ def get_spark(
     daemon stays: workers there may import the package only once
     ``--py-files`` arrive with a task, so no daemon can import it before
     it forks.
+
+    The same local branch starts the driver JVM from a dynamic class-data
+    archive of the classes Spark loads (``class_archive``), kept at
+    ``${XDG_CACHE_HOME:-~/.cache}/<package>/cds/<digest>.jsa``, where the
+    digest covers the Spark version, ``$SPARK_HOME/jars`` and the ``java``
+    binary. The first session on a machine writes it when its JVM exits
+    (about 10 s more at interpreter exit, ~160 MB on disk); later ones map
+    it and skip most of the class loading and verification that dominate
+    the JVM's start. The JVM can use an archive only when no non-empty
+    directory is on its class path, and Spark puts the conf directory
+    there: when ``$SPARK_CONF_DIR`` is unset and ``$SPARK_HOME/conf``
+    holds only ``*.template`` files, ``SPARK_CONF_DIR`` points at an empty
+    directory of the cache while the JVM is launched, and is unset again
+    afterwards. With an explicit ``$SPARK_CONF_DIR`` or real conf files,
+    a JVM already running in this process, or a cache directory that
+    cannot be written, the session starts without an archive, and a stale
+    or corrupt archive makes the JVM start without sharing.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -72,6 +92,7 @@ def get_spark(
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER")
+    archive = None
     builder = SparkSession.builder
     if master:
         builder = builder.master(master)
@@ -82,6 +103,11 @@ def get_spark(
             .config("spark.python.daemon.module", f"{__package__}.pydaemon")
             .config("spark.executorEnv.PYTHONPATH", package_parent)
         )
+        # only a session that launches its JVM can start it from the archive
+        if SparkContext._gateway is None:
+            archive = class_archive.plan()
+        if archive is not None:
+            builder = builder.config("spark.driver.defaultJavaOptions", archive.java_options)
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -90,12 +116,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # this engine's post-decode shuffles carry narrow digest/count
         # rows; the 64 MB default advisory size coalesces them to 1-3
-        # partitions and serializes mid-pipeline aggregations. Env
-        # override is an A/B knob only (BENCH.md micro-regression audit).
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("AADS_ADVISORY_BYTES", "8m"),
-        )
+        # partitions and serializes mid-pipeline aggregations.
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bound the transient per-batch allocation in Python workers
@@ -114,6 +136,16 @@ def get_spark(
         builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     for key, value in (extra or {}).items():
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    if archive is None:
+        spark = builder.getOrCreate()
+    else:
+        # the launcher reads SPARK_CONF_DIR from this process's environment;
+        # later subprocesses must see the caller's
+        os.environ["SPARK_CONF_DIR"] = archive.conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            del os.environ["SPARK_CONF_DIR"]
+        archive.promote_at_exit(SparkContext._gateway.proc)
     spark.sparkContext.setLogLevel("WARN")
     return spark
