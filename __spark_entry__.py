@@ -192,9 +192,10 @@ def q_approx_mclshod_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_approx_mcod_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-state ApproxMCOD analog (X1/X2): per-window pd_limit cap
     with seeded safe-inlier-only eviction + ar promotion
-    (operators/approx_mcod.py). The eviction priority is a portable
-    md5-derived hash, so the SQL twin replays the identical choice —
-    the approximate detector is exactly oracle-checkable."""
+    (operators/approx_mcod.py::window_verdicts, evaluated by the halo-block
+    kernel for every window of each block). The eviction priority is a
+    portable md5-derived hash, so the SQL twin replays the identical
+    choice — the approximate detector is exactly oracle-checkable."""
     cfg = DetectorConfig(
         w=DET_W,
         slide=DET_S,
@@ -1015,9 +1016,11 @@ select id from evals group by id having max(is_inlier) = false order by id
 
 def _approx_mcod_sql() -> str:
     """SQL twin of the bounded-active-set ApproxMCOD analog
-    (operators/approx_mcod.py): same portable md5 eviction priority, same
-    per-window safe-inlier eviction, arrival-vs-resident counting split,
-    and ar promotion."""
+    (operators/approx_mcod.py::window_verdicts): same portable md5 eviction
+    priority, same per-window safe-inlier eviction, arrival-vs-resident
+    counting split, and ar promotion. It fans every point out to its
+    windows and joins within each window, a layout independent of the
+    Spark plan's halo blocks, so it also checks their window coverage."""
     S, W, R, K = DET_S, DET_W, DET_R, DET_K
     WS = DET_WS
     PDL = APPROX_PD_LIMIT

@@ -1,20 +1,22 @@
 """Top-level detector API: algorithm dispatch (the reference's CLI surface).
 
 Maps the reference's four algorithms (/root/reference/src/Executor.java:98-110)
-onto two plans. Three share the halo-block kernel (operators/pairs.py): each
-block of W/S slides travels with a halo of its neighbours' adjacent ws-1
-slides, and one Arrow task emits every home point's verdict. They differ
-only in the neighbour plane:
+onto ONE plan, the halo-block kernel (operators/pairs.py): each block of
+W/S slides travels with a halo of its neighbours' adjacent ws-1 slides, and
+one Arrow task emits every home point's verdict. They differ only in the
+per-block verdict function:
 
-  mcod           -> exact Euclidean distance (operators/pairs.py)
-  lshod          -> distance masked by seeded LSH collisions, 4 hashes /
-                    10 tables / w=R (reference src/Executor.java:102-105;
-                    operators/lsh.py)
+  mcod           -> slide-binned counts over the exact Euclidean distance
+                    plane (operators/pairs.py)
+  lshod          -> the same over distance masked by seeded LSH collisions,
+                    4 hashes / 10 tables / w=R (reference
+                    src/Executor.java:102-105; operators/lsh.py)
   approx_mclshod -> the same at 5 hashes / 10 tables / w=3R/2
                     (/root/reference/src/Executor.java:106-109)
-  approx_mcod    -> per-window bounded active set with seeded safe-inlier-
-                    only eviction plus the ar approximation radius — the
-                    order-free distributed analog of the reference's PD cap
+  approx_mcod    -> every window in the block evaluated as a bounded active
+                    set with seeded safe-inlier-only eviction plus the ar
+                    approximation radius — the order-free distributed
+                    analog of the reference's PD cap
                     (/root/reference/src/algorithms/ApproxMCOD.java:40-72,
                     159-173,205-224; operators/approx_mcod.py). The
                     faithful order-dependent mechanism (micro-clusters,
@@ -27,18 +29,11 @@ only in the neighbour plane:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from .config import DetectorConfig
-from .operators.approx_mcod import approx_mcod_detect
-from .operators.detector import DetectionResult, detect
+from .operators.detector import detect
 
-
-def run_detector(points: DataFrame, cfg: DetectorConfig) -> DetectionResult:
-    """Dispatch by cfg.algorithm; ``points``: (id, features)."""
-    if cfg.algorithm.lower() == "approx_mcod":
-        return approx_mcod_detect(points, cfg)
-    return detect(points, cfg)
+# dispatch by cfg.algorithm; ``points``: (id, features)
+run_detector = detect
 
 
 def lshod_config(

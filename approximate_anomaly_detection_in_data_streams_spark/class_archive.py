@@ -14,14 +14,16 @@ every ``$SPARK_HOME/jars`` entry and the path and stat of the ``java``
 binary ``spark-class`` runs, so a Spark or JDK upgrade writes a new one.
 
 * The first session on a machine writes ``<digest>.jsa.<pid>.part``; at
-  interpreter exit the hook registered by ``promote_at_exit`` closes the
+  interpreter exit the hook registered by ``after_launch`` closes the
   JVM's stdin (PySpark's gateway exits on EOF), waits for the dump, and
   renames the part into place only if the JVM exited 0. A mapped archive
   is therefore never overwritten, and promotion deletes the archives of
   other digests.
 * Later sessions map the archive. A stale or corrupt one is rejected by
   the JVM, which then starts without sharing (the default
-  ``-Xshare:auto``).
+  ``-Xshare:auto``); when the JVM's ``/proc/<pid>/maps`` does not show
+  the archive, ``after_launch`` deletes it, so the next session writes a
+  fresh one. Without ``/proc`` the archive is left as it is.
 * The JVM neither writes nor maps an archive while a non-empty directory
   is on its class path, and Spark puts ``$SPARK_CONF_DIR`` (default
   ``$SPARK_HOME/conf``) there. When ``SPARK_CONF_DIR`` is unset and that
@@ -56,11 +58,14 @@ class Archive:
     path: str  # <digest>.jsa
     part: str | None  # where this session writes it, or None if it maps it
 
-    def promote_at_exit(self, proc: subprocess.Popen) -> None:
+    def after_launch(self, proc: subprocess.Popen) -> None:
         """When this session writes the archive, move it into place at
-        interpreter exit once ``proc`` (the driver JVM) has exited 0."""
+        interpreter exit once ``proc`` (the driver JVM) has exited 0; when
+        it maps the archive and ``proc`` did not, delete the archive."""
         if self.part is not None:
             atexit.register(_promote, proc, self.part, self.path)
+        elif _mapped(proc.pid, self.path) is False:
+            _remove(self.path)
 
 
 def cache_dir() -> str:
@@ -107,6 +112,15 @@ def _remove_dead_parts(directory: str) -> None:
         pid = part.rsplit(".", 2)[-2]
         if not (pid.isdigit() and _pid_alive(int(pid))):
             _remove(part)
+
+
+def _mapped(pid: int, path: str) -> bool | None:
+    """Whether process ``pid`` maps ``path``; None without ``/proc``."""
+    try:
+        with open(f"/proc/{pid}/maps") as maps:
+            return os.path.realpath(path) in maps.read()
+    except OSError:
+        return None
 
 
 def _remove(path: str) -> None:

@@ -11,8 +11,7 @@ toward cluster formation and join it as inliers (ApproxMCOD.java:205-259).
 Both mechanisms are inherently order-dependent (eviction history, unseeded
 RNG) — the faithful sequential mechanism lives in
 streaming/mcod_engine.py. This module is the scale path: an order-free,
-seeded, per-window restatement of the same two rules, embarrassingly
-parallel over windows:
+seeded, per-window restatement of the same two rules (``window_verdicts``):
 
   * X1 (bounded state): in every window, if the population exceeds
     ``pd_limit``, the excess is evicted from the *counted* set — only safe
@@ -36,12 +35,13 @@ Violation semantics downstream are unchanged: a point is a pure outlier
 iff no window ever classifies it inlier
 (/root/reference/src/core/OutlierDetector.java:43-62).
 
-Plan shape: window fan-out (x W/S duplication) -> one applyInPandas per
-window (<= W points, vectorized NumPy) -> per-id min/max aggregation. Every
-window is independent work — the same linear-scaling layout as the exact
-kernel, traded against the exact path's slide-binned count compression
-(eviction is window-local, so counts cannot be pre-aggregated across
-windows here).
+Plan shape: the halo-block kernel of the other three detectors
+(operators/pairs.py). Window b holds slides [b-ws+1, b], all within the
+halo of the block of every point it holds, so ``block_verdicts`` folds
+``window_verdicts`` over each window that holds a home point into those
+points' (ever_inlier, ever_outlier). A window that straddles two blocks is
+evaluated in both; eviction is window-local, so counts cannot be
+pre-aggregated across windows as the exact path's slide bins are.
 """
 
 from __future__ import annotations
@@ -49,18 +49,11 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
-from .detector import DetectionResult, lifetime_stats
-from .windows import n_batches, point_batches, with_slide
-
-EVAL_SCHEMA = "id long, b long, cnt long, is_inlier boolean"
 
 
-def _priority(ids: np.ndarray, seed: int) -> np.ndarray:
+def priority(ids: np.ndarray, seed: int) -> np.ndarray:
     """Portable per-id eviction priority: first 15 hex chars of
     md5(str(id) || '_' || str(seed)) as int64 — reproducible in DuckDB as
     ('0x' || substr(md5(...), 1, 15))::bigint, which is what makes the
@@ -74,97 +67,78 @@ def _priority(ids: np.ndarray, seed: int) -> np.ndarray:
     )
 
 
-def approx_mcod_evaluations(
-    points: DataFrame, cfg: DetectorConfig
-) -> DataFrame:
-    """Per-(point, window) end evaluations under the bounded-active-set
-    semantics. Output: (id, b, cnt, is_inlier)."""
-    pts = with_slide(points, cfg)
-    b_total = n_batches(points, cfg)
-    fanned = point_batches(pts, cfg, b_total).join(
-        pts.select("id", "features"), "id"
-    )
+def window_verdicts(
+    ids: np.ndarray,
+    slides: np.ndarray,
+    X: np.ndarray,
+    prio: np.ndarray | None,
+    b: int,
+    cfg: DetectorConfig,
+) -> np.ndarray:
+    """Each point's end-of-batch-``b`` verdict (is_inlier) in the window
+    of batch ``b``: the id-sorted rows ``ids``/``slides``/``X`` with
+    slides in [b-ws+1, b], and their ``priority`` (read only when the cap
+    binds, so None is fine for ``pd_limit`` = 0)."""
     r = float(cfg.r)
     ar = r / 2.0 + float(cfg.ar_factor) * r
-    k, pd_limit, seed = cfg.k, cfg.pd_limit, cfg.seed
+    k, m = cfg.k, len(ids)
+    sq = np.einsum("ij,ij->i", X, X)
+    d2 = sq[:, None] + sq[None, :] - 2.0 * (X @ X.T)
+    np.fill_diagonal(d2, np.inf)
+    within_r = d2 <= r * r
 
-    def emit(key, pdf):
-        b = int(key[0])
-        order = np.argsort(pdf["id"].to_numpy())
-        ids = pdf["id"].to_numpy()[order]
-        slides = pdf["slide"].to_numpy()[order]
-        X = np.stack(pdf["features"].to_numpy()[order]).astype(np.float64)
-        m = len(ids)
-        sq = np.einsum("ij,ij->i", X, X)
-        d2 = sq[:, None] + sq[None, :] - 2.0 * (X @ X.T)
-        np.fill_diagonal(d2, np.inf)
-        within_r = d2 <= r * r
+    # safe inliers: count_after = neighbors in same-or-later slides
+    later = slides[None, :] >= slides[:, None]
+    count_after = (within_r & later).sum(axis=1)
+    safe = count_after >= k
 
-        # safe inliers: count_after = neighbors in same-or-later slides
-        later = slides[None, :] >= slides[:, None]
-        count_after = (within_r & later).sum(axis=1)
-        safe = count_after >= k
+    # X1: seeded eviction of the excess, safe inliers only
+    evicted = np.zeros(m, dtype=bool)
+    excess = m - cfg.pd_limit if cfg.pd_limit > 0 else 0
+    if excess > 0 and safe.any():
+        cand = np.flatnonzero(safe)
+        take = cand[np.argsort(prio[cand], kind="stable")[:excess]]
+        evicted[take] = True
+    active = ~evicted
 
-        # X1: seeded eviction of the excess, safe inliers only
-        evicted = np.zeros(m, dtype=bool)
-        excess = m - pd_limit if pd_limit > 0 else 0
-        if excess > 0 and safe.any():
-            prio = _priority(ids, seed)
-            cand = np.flatnonzero(safe)
-            take = cand[np.argsort(prio[cand], kind="stable")[:excess]]
-            evicted[take] = True
-        active = ~evicted
+    # counts: arrivals of this window see only active points; older
+    # residents keep full-window counts (reference counts never shrink)
+    arrival = slides == b
+    cnt_full = within_r.sum(axis=1)
+    cnt_active = (within_r & active[None, :]).sum(axis=1)
+    cnt = np.where(arrival, cnt_active, cnt_full)
+    is_inlier = cnt >= k
 
-        # counts: arrivals of this window see only active points; older
-        # residents keep full-window counts (reference counts never shrink)
-        arrival = slides == b
-        cnt_full = within_r.sum(axis=1)
-        cnt_active = (within_r & active[None, :]).sum(axis=1)
-        cnt = np.where(arrival, cnt_active, cnt_full)
-        is_inlier = cnt >= k
+    # X2: ar-promotion in windows that evicted
+    if evicted.any():
+        within_ar = d2 <= ar * ar
+        centers = active & (((within_ar & active[None, :]).sum(axis=1)) >= k)
+        promoted = (within_ar & centers[None, :]).any(axis=1) | centers
+        is_inlier = is_inlier | promoted
+    return is_inlier | evicted  # evicted points are safe inliers
 
-        # X2: ar-promotion in windows that evicted
-        if evicted.any():
-            within_ar = d2 <= ar * ar
-            centers = active & (
-                ((within_ar & active[None, :]).sum(axis=1)) >= k
+
+def block_verdicts(cfg: DetectorConfig, b_total: int):
+    """The halo kernel's per-block verdicts (operators/pairs.py::
+    halo_verdicts) for ApproxMCOD: the home rows [h0, h1) of an id-sorted
+    block are evaluated in every window b from their first slide to
+    min(b_total, last slide + ws - 1); a point is ever inlier (outlier)
+    iff some window classifies it so."""
+    ws = cfg.ws
+
+    def block(ids, slides, X, h0, h1):
+        prio = priority(ids, cfg.seed) if cfg.pd_limit > 0 else None
+        ever_in = np.zeros(h1 - h0, dtype=bool)
+        ever_out = np.zeros(h1 - h0, dtype=bool)
+        for b in range(int(slides[h0]), min(b_total, int(slides[h1 - 1]) + ws - 1) + 1):
+            w0, w1 = np.searchsorted(slides, [b - ws + 1, b + 1])
+            is_in = window_verdicts(
+                ids[w0:w1], slides[w0:w1], X[w0:w1],
+                None if prio is None else prio[w0:w1], b, cfg,
             )
-            promoted = (within_ar & centers[None, :]).any(axis=1) | centers
-            is_inlier = is_inlier | promoted
-        is_inlier = is_inlier | evicted  # evicted points are safe inliers
+            a0, a1 = max(w0, h0), min(w1, h1)
+            ever_in[a0 - h0 : a1 - h0] |= is_in[a0 - w0 : a1 - w0]
+            ever_out[a0 - h0 : a1 - h0] |= ~is_in[a0 - w0 : a1 - w0]
+        return ever_in, ever_out
 
-        return pd.DataFrame(
-            {
-                "id": ids,
-                "b": np.full(m, b, dtype=np.int64),
-                "cnt": cnt.astype(np.int64),
-                "is_inlier": is_inlier,
-            }
-        )
-
-    return fanned.groupBy("b").applyInPandas(emit, EVAL_SCHEMA)
-
-
-def approx_mcod_detect(points: DataFrame, cfg: DetectorConfig) -> DetectionResult:
-    """Full bounded-state detection run (DetectionResult shape).
-
-    ``stats`` here are derived from end evaluations only — the reference's
-    pre/arrival evaluation moments interleave with its order-dependent
-    eviction history and are not order-free; the violation set (A6) needs
-    only end evaluations (operators/detector.py module docstring) and is
-    the parity target for approximate variants (recall vs exact, X4).
-    """
-    evals = approx_mcod_evaluations(points, cfg)
-    per_point = evals.groupBy("id").agg(
-        F.max("is_inlier").alias("ever_inlier"),
-        F.min("is_inlier").alias("always_inlier"),
-    )
-    per_point = per_point.select(
-        "id",
-        "ever_inlier",
-        (~F.col("always_inlier")).alias("ever_outlier"),
-    )
-    outliers = per_point.where(~F.col("ever_inlier")).select("id").orderBy("id")
-    return DetectionResult(
-        outliers=outliers, per_point=per_point, stats=lifetime_stats(per_point)
-    )
+    return block

@@ -50,8 +50,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
+from .approx_mcod import block_verdicts
 from .lsh import lsh_plane
-from .pairs import exact_plane, halo_blocks, halo_verdicts
+from .pairs import exact_plane, halo_blocks, halo_verdicts, plane_verdicts
 from .windows import n_batches, with_slide
 
 
@@ -107,22 +108,24 @@ def batch_diagnostics(points: DataFrame, cfg: DetectorConfig) -> DataFrame:
 def detect(
     points: DataFrame, cfg: DetectorConfig, unique_ids: bool = True
 ) -> DetectionResult:
-    """Run the exact (``mcod``) or LSH (``lshod``, ``approx_mclshod``)
-    detector: one halo-block kernel emits every point's verdict, and the
-    outliers and lifetime stats are projections of that table. A repeated
-    id raises ValueError unless ``unique_ids`` is False, in which case
-    each row counts as its own point."""
+    """Run the exact (``mcod``), LSH (``lshod``, ``approx_mclshod``) or
+    bounded-state (``approx_mcod``) detector: one halo-block kernel emits
+    every point's verdict, and the outliers and lifetime stats are
+    projections of that table. A repeated id raises ValueError unless
+    ``unique_ids`` is False, in which case each row counts as its own
+    point."""
     pts = with_slide(points, cfg)
     b_total = n_batches(points, cfg)
-    blocks = halo_blocks(pts, cfg)
     algo = cfg.algorithm.lower()
     if algo == "mcod":
-        make_plane = exact_plane(cfg)
+        block = plane_verdicts(exact_plane(cfg), cfg, b_total)
     elif algo in ("lshod", "approx_mclshod"):
-        make_plane = lsh_plane(cfg)
+        block = plane_verdicts(lsh_plane(cfg), cfg, b_total)
+    elif algo == "approx_mcod":
+        block = block_verdicts(cfg, b_total)
     else:
         raise ValueError(f"unknown algorithm: {cfg.algorithm}")
-    per_point = halo_verdicts(blocks, cfg, b_total, make_plane, unique_ids)
+    per_point = halo_verdicts(halo_blocks(pts, cfg), cfg, block, unique_ids)
     # sorted inside one partition: a range-partitioned orderBy would run a
     # sampling job that recomputes the whole kernel stage first
     outliers = (

@@ -13,12 +13,16 @@ ONE task that holds its neighbourhood:
     the home block, and the next block's first ws-1 slides (< 3x the
     feature rows, independent of n) — so every home point's 2ws-1
     co-window slides land in the same ``mapInArrow`` task;
-  * per home slide group, the neighbor plane (exact distance, or the LSH
-    variants' distance + collision mask, operators/lsh.py) is clamped to
-    the group's 2ws-1-slide column span and chunked by CHUNK rows; the
-    neighbors are binned by slide and ``slide_verdicts`` turns the bins
-    into (ever_inlier, ever_outlier). One row leaves the kernel per home
-    point: there is no count shuffle and no JVM verdict aggregation.
+  * one per-block function turns the block into its home points'
+    (ever_inlier, ever_outlier). For MCOD and the LSH variants it is
+    ``plane_verdicts``: per home slide group, the neighbor plane (exact
+    distance, or distance + collision mask, operators/lsh.py) is clamped
+    to the group's 2ws-1-slide column span and chunked by CHUNK rows, the
+    neighbors are binned by slide, and ``slide_verdicts`` turns the bins
+    into verdicts. ApproxMCOD evaluates each window in the block instead
+    (operators/approx_mcod.py::block_verdicts). One row leaves the kernel
+    per home point: there is no count shuffle and no JVM verdict
+    aggregation.
 
 Total work is O(n * W * d) spread over n/W independent tasks — linear in n
 and embarrassingly parallel (the reference is single-threaded;
@@ -44,6 +48,12 @@ CHUNK = 1024
 # plane(r0, r1, c0, c1) -> boolean (r1-r0, c1-c0) neighbor mask between the
 # block's sorted rows [r0, r1) and columns [c0, c1)
 Plane = Callable[[int, int, int, int], np.ndarray]
+
+# block(ids, slides, X, h0, h1) -> (ever_inlier, ever_outlier) of the home
+# rows [h0, h1) of one id-sorted halo block
+BlockVerdicts = Callable[
+    [np.ndarray, np.ndarray, np.ndarray, int, int], tuple[np.ndarray, np.ndarray]
+]
 
 
 def checked_matrix(
@@ -206,24 +216,35 @@ def slide_verdicts(
     return ever_inlier, ever_outlier
 
 
+def plane_verdicts(
+    make_plane: Callable[[np.ndarray], Plane], cfg: DetectorConfig, b_total: int
+) -> BlockVerdicts:
+    """Per-block verdicts from slide-binned neighbor counts: ``make_plane(X)``
+    builds one block's neighbor plane from its id-sorted features
+    (``exact_plane`` or operators/lsh.py::``lsh_plane``, which hashes the
+    block itself)."""
+
+    def block(ids, slides, X, h0, h1):
+        bins, arrival = slide_bins(make_plane(X), ids, slides, h0, h1, cfg.ws)
+        return slide_verdicts(bins, arrival, slides[h0:h1], b_total, cfg.k)
+
+    return block
+
+
 def halo_verdicts(
-    blocks: DataFrame,
-    cfg: DetectorConfig,
-    b_total: int,
-    make_plane: Callable[[np.ndarray], Plane],
-    unique_ids: bool,
+    blocks: DataFrame, cfg: DetectorConfig, block: BlockVerdicts, unique_ids: bool
 ) -> DataFrame:
     """(id, ever_inlier, ever_outlier) for every input point, from the
-    ``halo_blocks`` layout. ``make_plane(X)`` builds one block's neighbor
-    plane from its id-sorted features (``exact_plane`` or operators/lsh.py::
-    ``lsh_plane``, which hashes the block itself). With ``unique_ids`` a
-    repeated id raises ValueError (``check_unique_ids``).
+    ``halo_blocks`` layout: ``block`` gives each block's home verdicts
+    (``plane_verdicts`` or operators/approx_mcod.py::``block_verdicts``).
+    Features must pass ``list_matrix``; with ``unique_ids`` a repeated id
+    raises ValueError (``check_unique_ids``).
 
     partition-scan (mapInArrow over the g-repartition), not per-group
     applyInPandas: a long stream has thousands of W-sized blocks and the
     per-group Arrow round-trip dominates the per-block math.
     """
-    ws, k, dim = cfg.ws, cfg.k, cfg.dim
+    ws, dim = cfg.ws, cfg.dim
 
     def emit(batches):
         import pyarrow as pa
@@ -248,9 +269,7 @@ def halo_verdicts(
                 continue
             if unique_ids:
                 check_unique_ids(ids[b0:b1][h0:h1])
-            plane = make_plane(X[b0:b1])
-            bins, arrival = slide_bins(plane, ids[b0:b1], s, int(h0), int(h1), ws)
-            ever_in, ever_out = slide_verdicts(bins, arrival, s[h0:h1], b_total, k)
+            ever_in, ever_out = block(ids[b0:b1], s, X[b0:b1], int(h0), int(h1))
             out.append((ids[b0:b1][h0:h1], ever_in, ever_out))
         if out:
             yield pa.RecordBatch.from_pydict(

@@ -46,17 +46,3 @@ def n_batches(points: DataFrame, cfg: DetectorConfig) -> int:
     n = cfg.n_total or points.agg(F.max("id")).first()[0] or 0
     return (n + cfg.slide - 1) // cfg.slide
 
-
-def point_batches(points_with_slide: DataFrame, cfg: DetectorConfig, b_total: int) -> DataFrame:
-    """Fan each point out to the batches in which it is evaluated.
-
-    Output: (id, slide, b). Duplication factor <= W/S — bounded and chosen
-    by configuration, so the blow-up is controlled (SURVEY.md section 7
-    hard part (a)).
-    """
-    last = F.least(F.lit(b_total), F.col("slide") + F.lit(cfg.ws - 1))
-    return points_with_slide.select(
-        "id",
-        "slide",
-        F.explode(F.sequence(F.col("slide"), last)).alias("b"),
-    )

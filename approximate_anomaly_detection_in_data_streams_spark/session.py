@@ -64,8 +64,9 @@ def get_spark(
     directory of the cache while the JVM is launched, and is unset again
     afterwards. With an explicit ``$SPARK_CONF_DIR`` or real conf files,
     a JVM already running in this process, or a cache directory that
-    cannot be written, the session starts without an archive, and a stale
-    or corrupt archive makes the JVM start without sharing.
+    cannot be written, the session starts without an archive. A stale or
+    corrupt archive makes the JVM start without sharing, and is deleted so
+    that the next session writes a fresh one.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -146,6 +147,6 @@ def get_spark(
             spark = builder.getOrCreate()
         finally:
             del os.environ["SPARK_CONF_DIR"]
-        archive.promote_at_exit(SparkContext._gateway.proc)
+        archive.after_launch(SparkContext._gateway.proc)
     spark.sparkContext.setLogLevel("WARN")
     return spark

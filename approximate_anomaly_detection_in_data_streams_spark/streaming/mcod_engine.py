@@ -36,8 +36,10 @@ java.util.Random and iterates a JVM-order HashSet):
     tracked exactly like the reference's per-entry sets.
 
 Role in the engine: this is the semantic anchor for the approximate
-variants (the distributed batch analog in operators/approx_mcod.py is
-validated against it) and the per-key kernel for keyed streaming — one
+variants (the distributed batch analog, operators/approx_mcod.py::
+window_verdicts evaluated per window by the halo-block kernel, restates
+its eviction and ar rules order-free; both are held to the same recall
+against exact MCOD) and the per-key kernel for keyed streaming — one
 stream's state is bounded by W + pd_limit, and a 1000-executor deployment
 runs one engine per key inside applyInPandasWithState
 (streaming/keyed.py). It is intentionally sequential: the reference

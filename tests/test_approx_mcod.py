@@ -129,6 +129,53 @@ def test_batch_analog_ar_promotion_only_when_evicting(spark, gauss_points):
     assert with_ar == plain
 
 
+def _window_loop(X, cfg):
+    """Per-point (ever_inlier, ever_outlier) by calling window_verdicts on
+    every window b = 1..b_total of the whole stream — no blocks, no halo."""
+    from approximate_anomaly_detection_in_data_streams_spark.operators.approx_mcod import (
+        priority,
+        window_verdicts,
+    )
+
+    n = len(X)
+    ids = np.arange(1, n + 1)
+    slides = (ids - 1) // cfg.slide + 1
+    prio = priority(ids, cfg.seed)
+    ever_in = np.zeros(n, dtype=bool)
+    ever_out = np.zeros(n, dtype=bool)
+    for b in range(1, int(slides[-1]) + 1):
+        w = (slides > b - cfg.ws) & (slides <= b)
+        is_in = window_verdicts(ids[w], slides[w], X[w], prio[w], b, cfg)
+        ever_in[w] |= is_in
+        ever_out[w] |= ~is_in
+    return {int(i): (bool(a), bool(o)) for i, a, o in zip(ids, ever_in, ever_out)}
+
+
+def test_batch_analog_equals_a_plain_window_loop(spark, gauss2d):
+    """The halo kernel evaluates each window inside the block of every
+    point it holds: its per-point verdicts equal a plain loop over all
+    windows, at a binding cap and with a partial last slide (1990 points,
+    S=20), where windows straddle blocks of ws=5 slides."""
+    from dataclasses import replace
+
+    X = gauss2d[:1990]
+    cfg = DetectorConfig(
+        w=100, slide=20, r=0.5, k=8, algorithm="approx_mcod",
+        pd_limit=50, ar_factor=0.3, seed=5, dim=2, n_total=len(X),
+    )
+    expected = _window_loop(X, cfg)
+    assert expected != _window_loop(X, replace(cfg, pd_limit=0))  # the cap binds
+    points = spark.createDataFrame(
+        [(i + 1, [float(a), float(b)]) for i, (a, b) in enumerate(X)],
+        "id long, features array<double>",
+    )
+    got = {
+        r.id: (r.ever_inlier, r.ever_outlier)
+        for r in run_detector(points, cfg).per_point.collect()
+    }
+    assert got == expected
+
+
 @pytest.mark.parametrize(
     "dataset,w,s,r,k,golden",
     [

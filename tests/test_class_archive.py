@@ -48,7 +48,7 @@ class FakeBuilder:
 def launch(tmp_path, monkeypatch):
     """get_spark against a fake builder, a fresh cache and a Spark home
     whose conf directory holds only templates; returns the builder and
-    the processes whose archive would be promoted at exit."""
+    the processes handed to ``Archive.after_launch``."""
     spark_home = tmp_path / "spark"
     (spark_home / "jars").mkdir(parents=True)
     (spark_home / "jars" / "spark-core.jar").write_bytes(b"jar")
@@ -64,7 +64,7 @@ def launch(tmp_path, monkeypatch):
     monkeypatch.setattr(session, "SparkContext", context)
     promoted = []
     monkeypatch.setattr(
-        class_archive.Archive, "promote_at_exit", lambda self, proc: promoted.append(proc)
+        class_archive.Archive, "after_launch", lambda self, proc: promoted.append(proc)
     )
 
     def run(**kwargs):
@@ -102,6 +102,19 @@ def test_later_sessions_map_the_archive(launch):
     builder, _ = launch()
     assert builder.conf[OPTS].split() == [f"-XX:SharedArchiveFile={path}", class_archive.QUIET]
     assert not os.path.exists(dead_part)
+
+
+@pytest.mark.skipif(not sys.platform.startswith("linux"), reason="reads /proc/<pid>/maps")
+def test_an_unmapped_archive_is_deleted(tmp_path):
+    """A mapping session whose JVM did not map the archive deletes it; one
+    whose maps cannot be read leaves it."""
+    path = tmp_path / "x.jsa"
+    path.write_bytes(b"not an archive")
+    archive = class_archive.Archive("", str(tmp_path), str(path), None)
+    archive.after_launch(SimpleNamespace(pid=999_999_999))  # no such /proc entry
+    assert path.exists()
+    archive.after_launch(SimpleNamespace(pid=os.getpid()))  # maps no archive
+    assert not path.exists()
 
 
 @pytest.mark.parametrize(
@@ -163,5 +176,11 @@ def test_archive_is_written_once_then_mapped(tmp_path):
         path.chmod(0o644)
         path.write_bytes(b"not an archive" * 1000)
         assert run() == (path, "UNMAPPED")
+        # the JVM rejected it: the session deleted it, the next one writes
+        # a fresh archive, and the one after that maps it
+        assert not path.exists()
+        assert run() == (path, "UNMAPPED")
+        assert sorted(os.listdir(cds)) == [path.name]
+        assert run() == (path, "MAPPED")
     finally:
         shutil.rmtree(cds, ignore_errors=True)  # an archive is ~150 MB

@@ -125,41 +125,55 @@ def test_gapped_ids_invent_no_points(spark):
     assert set(out0) <= ids
 
 
+BAD_FEATURES = [
+    # ragged widths: the kernel names the expected and found width
+    (
+        "ragged",
+        [(i, [0.1 * i, 0.2]) for i in range(1, 30)] + [(30, [1.0, 2.0, 3.0])],
+        "ragged features: expected width 2, found 3 at id 30",
+    ),
+    # a NaN distance compares false: without the check the point
+    # would silently become an outlier
+    (
+        "nan",
+        [(i, [0.1 * i, float("nan") if i == 12 else 0.2]) for i in range(1, 31)],
+        "non-finite features at id 12",
+    ),
+    (
+        "inf",
+        [(i, [float("inf") if i == 5 else 0.1 * i, 0.2]) for i in range(1, 31)],
+        "non-finite features at id 5",
+    ),
+    # zero-width points would all coincide: every point an inlier
+    (
+        "empty",
+        [(i, [] if i == 17 else [0.1 * i, 0.2]) for i in range(1, 31)],
+        "empty features at id 17",
+    ),
+    # a repeated id is counted twice (n_points 31) and shifts slides
+    (
+        "duplicate-id",
+        [(i, [0.1 * i, 0.2]) for i in range(1, 31)] + [(11, [0.5, 0.2])],
+        "duplicate id 11",
+    ),
+]
+
+
+# every algorithm runs the halo kernel, which enforces the input contract
 @pytest.mark.parametrize(
-    "rows,match",
+    "algorithm,rows,match",
     [
-        # ragged widths: the kernel names the expected and found width
-        (
-            [(i, [0.1 * i, 0.2]) for i in range(1, 30)] + [(30, [1.0, 2.0, 3.0])],
-            "ragged features: expected width 2, found 3 at id 30",
-        ),
-        # a NaN distance compares false: without the check the point
-        # would silently become an outlier
-        (
-            [(i, [0.1 * i, float("nan") if i == 12 else 0.2]) for i in range(1, 31)],
-            "non-finite features at id 12",
-        ),
-        (
-            [(i, [float("inf") if i == 5 else 0.1 * i, 0.2]) for i in range(1, 31)],
-            "non-finite features at id 5",
-        ),
-        # zero-width points would all coincide: every point an inlier
-        (
-            [(i, [] if i == 17 else [0.1 * i, 0.2]) for i in range(1, 31)],
-            "empty features at id 17",
-        ),
-        # a repeated id is counted twice (n_points 31) and shifts slides
-        (
-            [(i, [0.1 * i, 0.2]) for i in range(1, 31)] + [(11, [0.5, 0.2])],
-            "duplicate id 11",
-        ),
+        pytest.param(algo, rows, match, id=case if algo == "mcod" else f"{algo}-{case}")
+        for algo in ("mcod", "approx_mcod")
+        for case, rows, match in BAD_FEATURES
     ],
-    ids=["ragged", "nan", "inf", "empty", "duplicate-id"],
 )
-def test_bad_features_fail_with_a_clear_message(spark, rows, match):
+def test_bad_features_fail_with_a_clear_message(spark, algorithm, rows, match):
     from approximate_anomaly_detection_in_data_streams_spark.api import run_detector
 
-    cfg = DetectorConfig(w=20, slide=10, r=0.5, k=2, dim=2, n_total=30)
+    cfg = DetectorConfig(
+        w=20, slide=10, r=0.5, k=2, dim=2, n_total=30, algorithm=algorithm
+    )
     res = run_detector(spark.createDataFrame(rows, POINT_SCHEMA), cfg)
     with pytest.raises(Exception, match=f"ValueError: {match}"):
         res.outliers.collect()

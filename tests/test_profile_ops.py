@@ -518,12 +518,14 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
     assert jobs == [], f"plan construction ran Spark jobs: {jobs}"
 
 
-@pytest.mark.parametrize("algorithm", ["mcod", "lshod"])
+@pytest.mark.parametrize("algorithm", ["mcod", "lshod", "approx_mcod"])
 def test_detector_verdicts_shuffle_once(spark, gauss_points, algorithm):
-    """Each halo block holds its home points' whole neighbourhood, so the
-    per-point verdicts need exactly ONE shuffle — the block repartition
+    """Each halo block holds its home points' whole neighbourhood — for
+    ApproxMCOD, every window that holds a home point — so the per-point
+    verdicts need exactly ONE shuffle — the block repartition
     hashpartitioning(g). A second exchange (a count table re-aggregated
-    per point id) must not come back."""
+    per point id, or per-window verdicts grouped by id) must not come
+    back."""
     import re
 
     from approximate_anomaly_detection_in_data_streams_spark.api import (
@@ -532,8 +534,13 @@ def test_detector_verdicts_shuffle_once(spark, gauss_points, algorithm):
 
     if algorithm == "mcod":
         cfg = DetectorConfig(w=100, slide=20, r=0.5, k=8, dim=2, n_total=2000)
-    else:
+    elif algorithm == "lshod":
         cfg = lshod_config(100, 20, 0.5, 8, dim=2, n_total=2000)
+    else:  # a binding cap: eviction and ar promotion both run
+        cfg = DetectorConfig(
+            w=100, slide=20, r=0.5, k=8, dim=2, n_total=2000,
+            algorithm="approx_mcod", pd_limit=50, ar_factor=0.3,
+        )
     per_point = run_detector(gauss_points, cfg).per_point
     per_point.collect()
     plan = per_point._jdf.queryExecution().executedPlan()
