@@ -13,10 +13,12 @@ Two layers:
     its bins when its slide expires (or at the final flush); the event
     queue / micro-cluster machinery exists only to speed up
     single-threaded incrementality (SURVEY.md section 4).
-  * ``run_structured_stream`` — Structured Streaming wrapper over the
-    distributed keyed dataflow (streaming/keyed.py): state lives in
-    Spark's state store via ``applyInPandasWithState``, one SlideDetector
-    per key, no driver-side collect anywhere in the plan.
+  * ``run_structured_stream`` — Structured Streaming driver for one
+    unkeyed point stream: the stream is the single key ``"_"`` of the
+    distributed keyed dataflow (streaming/keyed.py), whose state lives in
+    Spark's state store via ``applyInPandasWithState``; ``cfg.n_total``
+    (or one ``max(id)`` job) ends it, each trigger drains the available
+    backlog, and no driver-side collect runs anywhere in the plan.
 
 Verified equivalent to the batch detector (tests/test_streaming.py):
 same pure-outlier set, same lifetime stats.
@@ -24,7 +26,7 @@ same pure-outlier set, same lifetime stats.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 
@@ -168,50 +170,23 @@ def run_slide_loop(ids: np.ndarray, X, cfg: DetectorConfig) -> dict:
 
 
 def run_structured_stream(
-    spark,
-    input_dir: str,
-    cfg: DetectorConfig,
-    checkpoint_dir: str,
-    dim: int,
+    spark, input_dir: str, cfg: DetectorConfig, checkpoint_dir: str
 ) -> dict:
-    """Structured Streaming driver for a single unkeyed point stream.
-
-    Thin wrapper over the DISTRIBUTED keyed dataflow (streaming/keyed.py,
-    ``applyInPandasWithState`` holding one SlideDetector per key in the
-    state store — no ``collect()`` anywhere in the plan): the unkeyed
-    stream becomes one key, a sentinel file (id = -n_total, derived from a
-    batch scan of the same directory) marks the finite stream's end, and
-    the keyed flush returns the same result dict the old driver-side loop
-    produced. ``dim`` is kept for signature compatibility; the schema
-    carries it.
-    """
-    import json as _json
-    import os
-
+    """Drive a finite unkeyed JSON point stream (id, features) to
+    completion and return the ``run_slide_loop`` result dict. The stream
+    ends at ``cfg.n_total``, else at the directory's max id, read by one
+    batch job before the stream starts (never per micro-batch)."""
     from pyspark.sql import functions as F
 
-    from .keyed import INPUT_SCHEMA, run_keyed_structured_stream
+    from .keyed import drain_stream
 
     point_schema = "id long, features array<double>"
-    # cfg.n_total skips the one-time directory scan; the agg fallback runs
-    # once before the stream starts (never per micro-batch)
-    n_total = cfg.n_total or (
+    n = cfg.n_total or (
         spark.read.schema(point_schema).json(input_dir).agg(F.max("id")).first()[0]
     )
-    staged = os.path.join(checkpoint_dir, "_keyed_input")
-    os.makedirs(staged, exist_ok=True)
-    (
-        spark.read.schema(point_schema)
+    stream = (
+        spark.readStream.schema(point_schema)
         .json(input_dir)
         .select(F.lit("_").alias("key"), "id", "features")
-        .write.mode("overwrite")
-        .json(staged)
     )
-    with open(os.path.join(staged, "zz_sentinel.json"), "w") as fh:
-        fh.write(
-            _json.dumps({"key": "_", "id": -int(n_total), "features": []}) + "\n"
-        )
-    res = run_keyed_structured_stream(
-        spark, staged, cfg, os.path.join(checkpoint_dir, "ck")
-    )
-    return res["_"]
+    return drain_stream(stream, replace(cfg, n_total=n), checkpoint_dir)["_"]

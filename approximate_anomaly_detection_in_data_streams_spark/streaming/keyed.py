@@ -14,7 +14,9 @@ Count-based semantics need arrival order (ids are the time axis,
 /root/reference/src/core/OutlierDetector.java:10), so rows buffer per key
 until a full slide's id range is present, then complete slides process in
 order — the result is independent of file listing order and trigger
-boundaries. A finite stream is terminated per key by a *sentinel row*
+boundaries, so each trigger drains the whole available backlog, and a
+key's buffer holds at most one Arrow batch plus out-of-order rows. A
+finite stream ends per key at ``cfg.n_total`` or at a *sentinel row*
 with ``id = -n_total``; the final flush (W4) runs only once every id
 <= n_total has been processed, so a sentinel overtaking data rows cannot
 truncate the stream.
@@ -58,9 +60,11 @@ def _keyed_func(cfg: DetectorConfig):
                 "det": make_slide_detector(cfg, cfg.dim),
                 "pending": {},
                 "next": 1,
-                "expected": None,
+                "expected": cfg.n_total or None,
                 "done": False,
             }
+        det: SlideDetector = st["det"]
+        rows = []
         for pdf in pdfs:
             for pid, feats in zip(pdf["id"], pdf["features"]):
                 pid = int(pid)
@@ -73,25 +77,23 @@ def _keyed_func(cfg: DetectorConfig):
                 else:
                     st["pending"][pid] = np.asarray(feats, dtype=np.float64)
 
-        det: SlideDetector = st["det"]
-        rows = []
-        # drain complete slides in order; once the sentinel fixes the
-        # stream's end, the last slide may be partial and the final flush
-        # (W4) follows it
-        while not st["done"]:
-            stop = st["next"] + cfg.slide
-            if st["expected"] is not None:
-                stop = min(stop, st["expected"] + 1)
-            ids = list(range(st["next"], stop))
-            if not all(i in st["pending"] for i in ids):
-                break
-            if ids:
-                det.process_batch(ids, [st["pending"].pop(i) for i in ids])
-                st["next"] = stop
-            if st["expected"] is not None and st["next"] > st["expected"]:
-                res = det.finish()
-                st["done"] = True
-                rows += [(key[0], k, v) for k, v in res.items() if k != "outliers"]
+            # drain complete slides in order before the next batch is read;
+            # once the stream's end is known, the last slide may be partial
+            # and the final flush (W4) follows it
+            while not st["done"]:
+                stop = st["next"] + cfg.slide
+                if st["expected"] is not None:
+                    stop = min(stop, st["expected"] + 1)
+                ids = list(range(st["next"], stop))
+                if not all(i in st["pending"] for i in ids):
+                    break
+                if ids:
+                    det.process_batch(ids, [st["pending"].pop(i) for i in ids])
+                    st["next"] = stop
+                if st["expected"] is not None and st["next"] > st["expected"]:
+                    res = det.finish()
+                    st["done"] = True
+                    rows += [(key[0], k, v) for k, v in res.items() if k != "outliers"]
 
         # emit outliers recorded by expiry (or by the flush above) in THIS
         # trigger — streaming consumers see violations as soon as the
@@ -136,7 +138,21 @@ def run_keyed_structured_stream(
     query_name: str = "aads_keyed_stream",
     output_dir: str | None = None,
 ) -> dict[str, dict]:
-    """Drive a finite keyed JSON stream to completion (availableNow) and
+    """Drive a finite keyed JSON stream (``INPUT_SCHEMA`` rows) to
+    completion; see ``drain_stream``."""
+    stream = spark.readStream.schema(INPUT_SCHEMA).json(input_dir)
+    return drain_stream(stream, cfg, checkpoint_dir, query_name, output_dir)
+
+
+def drain_stream(
+    stream,
+    cfg: DetectorConfig,
+    checkpoint_dir: str,
+    query_name: str = "aads_keyed_stream",
+    output_dir: str | None = None,
+) -> dict[str, dict]:
+    """Run a keyed point stream (key, id, features) through the stateful
+    detector until the available backlog is drained (availableNow) and
     return {key: {outliers, n_only_inlier, n_only_outlier,
     n_both_inlier_outlier}}.
 
@@ -148,11 +164,7 @@ def run_keyed_structured_stream(
     files, and appends each result row exactly once (tested in
     tests/test_streaming.py::test_keyed_stream_resumes_from_checkpoint);
     the returned dict then reflects ALL rows accumulated in the sink."""
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
+    spark = stream.sparkSession
     results = keyed_stream_results(stream, cfg)
     if output_dir is None:
         writer = results.writeStream.format("memory").queryName(query_name)

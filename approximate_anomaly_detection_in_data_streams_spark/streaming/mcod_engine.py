@@ -39,11 +39,13 @@ Role in the engine: this is the semantic anchor for the approximate
 variants (the distributed batch analog, operators/approx_mcod.py::
 window_verdicts evaluated per window by the halo-block kernel, restates
 its eviction and ar rules order-free; both are held to the same recall
-against exact MCOD) and the per-key kernel for keyed streaming — one
-stream's state is bounded by W + pd_limit, and a 1000-executor deployment
-runs one engine per key inside applyInPandasWithState
-(streaming/keyed.py). It is intentionally sequential: the reference
-algorithm's eviction state is order-dependent by construction.
+against exact MCOD). It runs the CLI's ``--engine sequential`` (MCOD and
+ApproxMCOD over one collected stream, __main__.py) and the golden and
+recall tests (tests/test_approx_mcod.py). It is not the keyed streaming
+kernel: streaming/keyed.py holds one incremental.py::SlideDetector per
+key, which raises for ``approx_mcod``. It is intentionally sequential:
+the reference algorithm's eviction state is order-dependent by
+construction.
 """
 
 from __future__ import annotations

@@ -246,7 +246,7 @@ def validate_images(
 
 
 def profile_drift_slides(
-    feats: DataFrame, slide_size: int, l1_limit: float, dim: int | None = None
+    feats: DataFrame, slide_size: int, l1_limit: float, dim: int
 ) -> DataFrame:
     """Per-slide distribution-drift check (sustained-shift detector).
 
@@ -254,67 +254,38 @@ def profile_drift_slides(
     compared to the global mean profile by L1 distance. All JVM.
     Output: (slide, n_rows, l1, drifted) per slide.
 
-    Single input pass either way: the global profile is re-aggregated
-    from the per-slide sums (``sum(slide_sum)/sum(n)`` == ``avg(v)`` over
-    all rows up to fp associativity — the same reassociation any
-    partial-aggregate plan performs). At the 10^12-row shape the feature
-    scan is the drift sink's entire cost; the re-aggregation input is
-    O(slides x dims) rows.
+    Single input pass: the global profile is re-aggregated from the
+    per-slide sums (``sum(s_i)/sum(n)`` == ``avg(features[i])`` over all
+    rows up to fp associativity — the same reassociation any partial-aggregate
+    plan performs). At the 10^12-row shape the feature scan is the drift
+    sink's entire cost; the re-aggregation input is O(slides x dims) rows.
 
-    When ``dim`` is known (the validator's digest features have a fixed
-    package-constant width), the plan is EXPLODE-FREE: per-dim sums
+    ``dim`` is the features' fixed width (the validator's digest features
+    have a package-constant one). The plan is EXPLODE-FREE: per-dim sums
     compile to ``dim`` codegen aggregate expressions over the array
     columns, so the shuffle carries one (1 + dim)-column row per slide
     instead of ``dim`` exploded rows per input row — at 1M x 10-dim that
     is 10M narrow shuffle rows removed, the exact allocation-heavy
-    pattern the host punishes (BENCH.md round-3 forensics). Falls back to
-    posexplode + two-level aggregation when ``dim`` is None (unknown
-    width)."""
+    pattern the host punishes (BENCH.md round-3 forensics)."""
+    from pyspark import StorageLevel
+
     slide_col = (F.col("ordinal") / F.lit(slide_size)).cast("long").alias("slide")
-    if dim is not None:
-        per_slide = feats.select(slide_col, "features").groupBy("slide").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.sum(F.col("features")[i]).alias(f"s{i}") for i in range(dim)],
-        )
-        from pyspark import StorageLevel
-
-        per_slide = per_slide.persist(StorageLevel.MEMORY_AND_DISK)
-        glob = per_slide.groupBy().agg(
-            F.sum("n").alias("gn"),
-            *[F.sum(f"s{i}").alias(f"g{i}") for i in range(dim)],
-        )
-        l1_expr = sum(
-            F.abs(F.col(f"s{i}") / F.col("n") - F.col(f"g{i}") / F.col("gn"))
-            for i in range(dim)
-        ).alias("l1")
-        l1 = per_slide.crossJoin(F.broadcast(glob)).select(
-            "slide", F.col("n").alias("n_rows"), l1_expr
-        )
-    else:
-        dims = feats.select(
-            slide_col,
-            F.posexplode("features").alias("dim", "v"),
-        )
-        per_slide = dims.groupBy("slide", "dim").agg(
-            F.avg("v").alias("slide_mean"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("slide_sum"),
-        )
-        from pyspark import StorageLevel
-
-        per_slide = per_slide.persist(StorageLevel.MEMORY_AND_DISK)
-        global_profile = per_slide.groupBy("dim").agg(
-            (F.sum("slide_sum") / F.sum("n")).alias("global_mean")
-        )
-        l1 = (
-            per_slide.join(F.broadcast(global_profile), "dim")
-            .groupBy("slide")
-            .agg(
-                F.sum(F.abs(F.col("slide_mean") - F.col("global_mean"))).alias("l1"),
-                F.max("n").alias("n_rows"),
-            )
-            .select("slide", "n_rows", "l1")
-        )
+    per_slide = feats.select(slide_col, "features").groupBy("slide").agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.sum(F.col("features")[i]).alias(f"s{i}") for i in range(dim)],
+    )
+    per_slide = per_slide.persist(StorageLevel.MEMORY_AND_DISK)
+    glob = per_slide.groupBy().agg(
+        F.sum("n").alias("gn"),
+        *[F.sum(f"s{i}").alias(f"g{i}") for i in range(dim)],
+    )
+    l1_expr = sum(
+        F.abs(F.col(f"s{i}") / F.col("n") - F.col(f"g{i}") / F.col("gn"))
+        for i in range(dim)
+    ).alias("l1")
+    l1 = per_slide.crossJoin(F.broadcast(glob)).select(
+        "slide", F.col("n").alias("n_rows"), l1_expr
+    )
     return l1.select(
         "slide",
         "n_rows",

@@ -74,7 +74,7 @@ def test_structured_stream_matches_batch_detector(
                     + "\n"
                 )
     res = run_structured_stream(
-        spark, str(src), CFG, str(tmp_path / "ck"), dim=2
+        spark, str(src), CFG, str(tmp_path / "ck")
     )
     assert res["outliers"] == outliers
     assert res["n_only_outlier"] == stats["n_only_outlier"]
@@ -130,25 +130,17 @@ def test_lshod_structured_stream_matches_batch(
                     + "\n"
                 )
     res = run_structured_stream(
-        spark, str(src), LSHOD_CFG, str(tmp_path / "ck_lshod"), dim=2
+        spark, str(src), LSHOD_CFG, str(tmp_path / "ck_lshod")
     )
     assert res["outliers"] == outliers
     assert res["n_only_outlier"] == stats["n_only_outlier"]
 
 
-def test_keyed_stream_matches_batch_per_key(spark, gauss2d, tmp_path):
-    """Distributed keyed streaming (applyInPandasWithState, one detector
-    per key in the state store, no collect() in the dataflow): each key's
-    outliers and lifetime stats must equal a standalone batch run on that
-    key's stream — with files interleaved across keys and out of order."""
-    from approximate_anomaly_detection_in_data_streams_spark.streaming.keyed import (
-        run_keyed_structured_stream,
-    )
-
+def _write_interleaved_keyed_input(src, gauss2d) -> dict:
+    """Two keys' slide files, interleaved across keys and out of order
+    within each key, plus their sentinels; returns {key: points}."""
     streams = {"a": gauss2d[:600], "b": gauss2d[600:1400]}
-    src = tmp_path / "keyed_in"
     src.mkdir()
-    # interleave keys and write slides out of order within each key
     seq = 0
     for key, X in streams.items():
         order = list(range(0, len(X), CFG.slide))
@@ -171,8 +163,22 @@ def test_keyed_stream_matches_batch_per_key(spark, gauss2d, tmp_path):
     with open(src / "a_sentinels.json", "w") as fh:
         for key, X in streams.items():
             fh.write(json.dumps({"key": key, "id": -len(X), "features": []}) + "\n")
+    return streams
 
-    got = run_keyed_structured_stream(spark, str(src), CFG, str(tmp_path / "ck2"))
+
+def test_keyed_stream_matches_batch_per_key(spark, gauss2d, tmp_path):
+    """Distributed keyed streaming (applyInPandasWithState, one detector
+    per key in the state store, no collect() in the dataflow): each key's
+    outliers and lifetime stats must equal a standalone batch run on that
+    key's stream — with files interleaved across keys and out of order."""
+    from approximate_anomaly_detection_in_data_streams_spark.streaming.keyed import (
+        run_keyed_structured_stream,
+    )
+
+    streams = _write_interleaved_keyed_input(tmp_path / "keyed_in", gauss2d)
+    got = run_keyed_structured_stream(
+        spark, str(tmp_path / "keyed_in"), CFG, str(tmp_path / "ck2")
+    )
     assert set(got) == set(streams)
     for key, X in streams.items():
         ids = np.arange(1, len(X) + 1)
@@ -272,6 +278,59 @@ def test_keyed_stream_resumes_from_checkpoint(spark, gauss2d, tmp_path):
     assert len(set(merged)) == len(merged)  # exactly-once across the restart
     for kk in ("n_only_inlier", "n_only_outlier", "n_both_inlier_outlier"):
         assert got2["a"][kk] == exp[kk]
+
+
+def _committed_batches(checkpoint) -> int:
+    return len([f for f in os.listdir(checkpoint / "commits") if f.isdigit()])
+
+
+def test_keyed_results_do_not_depend_on_trigger_boundaries(spark, gauss2d, tmp_path):
+    """One file per trigger (perfbench's reader) and the whole backlog in
+    one trigger (run_keyed_structured_stream) give the same result dict
+    on the interleaved, out-of-order two-key input."""
+    from approximate_anomaly_detection_in_data_streams_spark.streaming.keyed import (
+        INPUT_SCHEMA,
+        drain_stream,
+        run_keyed_structured_stream,
+    )
+
+    src = tmp_path / "keyed_in"
+    _write_interleaved_keyed_input(src, gauss2d)
+    one_file = (
+        spark.readStream.schema(INPUT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    per_file = drain_stream(one_file, CFG, str(tmp_path / "ck_one"), "one_file_triggers")
+    backlog = run_keyed_structured_stream(
+        spark, str(src), CFG, str(tmp_path / "ck_all"), "backlog_trigger"
+    )
+    assert set(backlog) == {"a", "b"}
+    assert per_file == backlog
+    assert _committed_batches(tmp_path / "ck_one") == len(os.listdir(src))
+    assert _committed_batches(tmp_path / "ck_all") == 1
+
+
+def test_structured_stream_writes_only_its_checkpoint(spark, gauss2d, tmp_path):
+    """With ``cfg.n_total`` set, the unkeyed stream reads its directory
+    as it is: no staged copy of the input and no sentinel file, and
+    nothing but the streaming checkpoint under ``checkpoint_dir``."""
+    src = tmp_path / "in"
+    src.mkdir()
+    X = gauss2d[:400]
+    for seq, start in enumerate(range(0, len(X), CFG.slide)):
+        with open(src / f"batch_{seq:06d}.json", "w") as fh:
+            for i in range(start, start + CFG.slide):
+                fh.write(json.dumps({"id": i + 1, "features": list(X[i])}) + "\n")
+    files = sorted(os.listdir(src))
+    ck = tmp_path / "ck"
+    res = run_structured_stream(spark, str(src), replace(CFG, n_total=len(X)), str(ck))
+    assert res == run_slide_loop(np.arange(1, len(X) + 1), X, CFG)
+    assert sorted(os.listdir(tmp_path)) == ["ck", "in"]
+    assert sorted(os.listdir(src)) == files
+    assert {f for f in os.listdir(ck) if not f.startswith(".")} == {
+        "commits", "metadata", "offsets", "sources", "state"
+    }
 
 
 def test_keyed_state_size_flat():
@@ -378,6 +437,48 @@ def test_lsh_keyed_state_is_no_larger_than_mcod():
         steady[cfg.algorithm] = max(sizes[4:])  # the window is full
     assert steady["lshod"] <= 1.01 * steady["mcod"], steady
     assert steady["approx_mclshod"] <= 1.01 * steady["mcod"], steady
+
+
+def test_keyed_func_drains_each_chunk_before_reading_the_next(monkeypatch, gauss2d):
+    """A trigger's Arrow chunks are drained one by one: slide c is
+    processed before chunk c + 1 is read, so a key's pending buffer holds
+    at most one chunk whatever the backlog. ``cfg.n_total`` ends the
+    stream without a sentinel row. Spark-free."""
+    import pandas as pd
+
+    from approximate_anomaly_detection_in_data_streams_spark.streaming import (
+        incremental,
+    )
+    from approximate_anomaly_detection_in_data_streams_spark.streaming.keyed import (
+        _keyed_func,
+    )
+
+    S = CFG.slide
+    cfg = replace(CFG, n_total=40 * S)
+    X = gauss2d[: cfg.n_total]
+    events = []
+    process_batch = incremental.SlideDetector.process_batch
+
+    def logged(self, ids, rows):
+        events.append(("process", int(ids[0])))
+        process_batch(self, ids, rows)
+
+    monkeypatch.setattr(incremental.SlideDetector, "process_batch", logged)
+
+    def chunks():
+        for c in range(40):
+            events.append(("read", c + 1))
+            ids = np.arange(c * S + 1, (c + 1) * S + 1)
+            yield pd.DataFrame({"id": ids, "features": list(X[c * S : (c + 1) * S])})
+
+    out = pd.concat(_keyed_func(cfg)(("k",), chunks(), _FakeState()))
+    assert events[:3] == [("read", 1), ("process", 1), ("read", 2)]
+    assert events == [
+        e for c in range(40) for e in (("read", c + 1), ("process", c * S + 1))
+    ]
+    got = {"outliers": sorted(int(v) for v in out.value[out.kind == "outlier"])}
+    got.update((k, int(v)) for k, v in zip(out.kind, out.value) if k != "outlier")
+    assert got == run_slide_loop(np.arange(1, cfg.n_total + 1), X, cfg)
 
 
 @pytest.mark.parametrize(
