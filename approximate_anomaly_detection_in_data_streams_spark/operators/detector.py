@@ -45,6 +45,7 @@ require serializing the exact single-threaded reinsertion order.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -62,7 +63,13 @@ class DetectionResult:
 
     outliers: DataFrame  # (id) ascending — the violation set (K1 sink shape)
     per_point: DataFrame  # (id, ever_inlier, ever_outlier)
-    stats: DataFrame  # single row of lifetime counters (K2 sink shape)
+
+    @cached_property
+    def stats(self) -> DataFrame:
+        """Single row of lifetime counters (K2 sink shape), planned when
+        first read: a caller that only wants the outliers sends the JVM
+        none of its aggregate's commands."""
+        return lifetime_stats(self.per_point)
 
 
 def batch_diagnostics(points: DataFrame, cfg: DetectorConfig) -> DataFrame:
@@ -134,9 +141,7 @@ def detect(
         .repartition(1)
         .sortWithinPartitions("id")
     )
-    return DetectionResult(
-        outliers=outliers, per_point=per_point, stats=lifetime_stats(per_point)
-    )
+    return DetectionResult(outliers=outliers, per_point=per_point)
 
 
 def lifetime_stats(per_point: DataFrame) -> DataFrame:

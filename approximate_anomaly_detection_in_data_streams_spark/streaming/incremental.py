@@ -175,7 +175,9 @@ def run_structured_stream(
     """Drive a finite unkeyed JSON point stream (id, features) to
     completion and return the ``run_slide_loop`` result dict. The stream
     ends at ``cfg.n_total``, else at the directory's max id, read by one
-    batch job before the stream starts (never per micro-batch)."""
+    batch job before the stream starts (never per micro-batch). Ids must
+    run from 1 without gaps: a stream that stalls at a missing id raises
+    ValueError."""
     from pyspark.sql import functions as F
 
     from .keyed import drain_stream
@@ -189,4 +191,10 @@ def run_structured_stream(
         .json(input_dir)
         .select(F.lit("_").alias("key"), "id", "features")
     )
-    return drain_stream(stream, replace(cfg, n_total=n), checkpoint_dir)["_"]
+    res = drain_stream(stream, replace(cfg, n_total=n), checkpoint_dir).get("_")
+    if res is None or res["n_only_inlier"] is None:
+        raise ValueError(
+            f"the stream stalled before its end at id {n}: "
+            "ids must run from 1 without gaps"
+        )
+    return res

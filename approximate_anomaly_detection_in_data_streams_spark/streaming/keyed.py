@@ -16,6 +16,8 @@ until a full slide's id range is present, then complete slides process in
 order — the result is independent of file listing order and trigger
 boundaries, so each trigger drains the whole available backlog, and a
 key's buffer holds at most one Arrow batch plus out-of-order rows. A
+key's ids must therefore be contiguous from 1: a missing id stalls that
+key's stream at the slide that holds it, and it never flushes. A
 finite stream ends per key at ``cfg.n_total`` or at a *sentinel row*
 with ``id = -n_total``; the final flush (W4) runs only once every id
 <= n_total has been processed, so a sentinel overtaking data rows cannot
@@ -156,6 +158,11 @@ def drain_stream(
     return {key: {outliers, n_only_inlier, n_only_outlier,
     n_both_inlier_outlier}}.
 
+    Each key's ids must run from 1 without gaps. A key whose stream has
+    not ended, or stalled at a missing id, holds the outliers its expired
+    slides recorded and counters ``None``; a key that recorded nothing is
+    absent.
+
     ``output_dir=None`` uses a memory sink (test/driver convenience; memory
     sinks cannot recover a checkpoint). Pass a real ``output_dir`` for the
     durable path: a JSON file sink that SUPPORTS checkpoint recovery — a
@@ -189,9 +196,9 @@ def drain_stream(
             r.key,
             {
                 "outliers": [],
-                "n_only_inlier": 0,
-                "n_only_outlier": 0,
-                "n_both_inlier_outlier": 0,
+                "n_only_inlier": None,
+                "n_only_outlier": None,
+                "n_both_inlier_outlier": None,
             },
         )
         if r.kind == "outlier":

@@ -477,12 +477,22 @@ def test_minhash_null_and_empty_text(spark):
         assert got == {(4, 5, 1.0)}
 
 
-def test_plan_build_runs_no_jobs(spark, sf_dir):
+def test_plan_build_runs_no_jobs(spark, sf_dir, monkeypatch):
     """With n_total carried in DetectorConfig, constructing every detector
     query plan must trigger ZERO Spark jobs (no driver-blocking agg/first
     at plan-build time), whether or not dim is given: the LSH variants
     hash inside the kernel, so their plans need no feature-width probe.
-    Asserted via a dedicated job group."""
+    Asserted via a dedicated job group.
+
+    A plan build also stays within a budget of py4j commands, each one a
+    driver-JVM round trip: the 1-d MCOD plan sent 629 while PySpark
+    captured every Column method's call site, and 149 without. ``stats``
+    is planned only when first read, so a caller that wants only the
+    outliers pays none of its commands."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
     from approximate_anomaly_detection_in_data_streams_spark.api import (
         approx_mclshod_config,
         lshod_config,
@@ -492,6 +502,17 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
         DetectorConfig,
     )
 
+    sent = []
+    send_command = ClientServerConnection.send_command
+    builder = threading.get_ident()
+
+    def counted(self, command):
+        # py4j's finalizer thread sends the deletes of collected objects
+        if threading.get_ident() == builder:
+            sent.append(command)
+        return send_command(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     pts = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
         "event_id + 1 as id", "array(cast(value as double)) as features"
     )
@@ -510,8 +531,15 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
                 pd_limit=300, ar_factor=0.3, dim=1, n_total=n,
             ),
         ):
+            start = len(sent)
             res = run_detector(pts, cfg)
-            _ = res.outliers, res.stats  # plans only, never executed
+            built = len(sent)
+            assert built - start <= 200, (cfg.algorithm, built - start)
+            _ = res.stats  # plans only, never executed
+            assert len(sent) > built  # first read plans the aggregate
+            read = len(sent)
+            _ = res.stats
+            assert len(sent) == read
     finally:
         sc.setJobGroup("done", "")
     jobs = sc.statusTracker().getJobIdsForGroup("plan-build")

@@ -333,6 +333,59 @@ def test_structured_stream_writes_only_its_checkpoint(spark, gauss2d, tmp_path):
     }
 
 
+@pytest.mark.parametrize("gap", [12, 32], ids=["before-any-expiry", "after-expiries"])
+def test_structured_stream_with_an_id_gap_fails_loudly(spark, tmp_path, gap):
+    """A missing id stalls the stream at the slide that holds it, so the
+    stream never reaches its end. Before the check, a gap that no expiry
+    had passed failed with a bare KeyError, and a later one returned the
+    outliers of the expired slides with every lifetime counter 0."""
+    cfg = DetectorConfig(w=10, slide=5, r=0.5, k=3, n_total=40)
+    rng = np.random.default_rng(0)
+    src = tmp_path / "in"
+    src.mkdir()
+    with open(src / "points.json", "w") as fh:
+        for i in range(1, cfg.n_total + 1):
+            if i != gap:
+                fh.write(json.dumps({"id": i, "features": [float(rng.normal())]}) + "\n")
+    with pytest.raises(ValueError, match="stalled .* ids must run from 1 without gaps"):
+        run_structured_stream(spark, str(src), cfg, str(tmp_path / "ck"))
+
+
+def test_keyed_stream_reports_a_stalled_key_without_counters(spark, gauss2d, tmp_path):
+    """A key whose ids have a gap keeps the outliers its expired slides
+    recorded, but reports no lifetime counters (None, not 0), and the
+    other key's stream is unaffected."""
+    from approximate_anomaly_detection_in_data_streams_spark.streaming.keyed import (
+        run_keyed_structured_stream,
+    )
+
+    streams = {"a": gauss2d[:400], "b": gauss2d[400:800]}
+    gap = 312
+    src = tmp_path / "in"
+    src.mkdir()
+    with open(src / "points.json", "w") as fh:
+        for key, X in streams.items():
+            for i in range(len(X)):
+                if key == "a" or i + 1 != gap:
+                    row = {"key": key, "id": i + 1, "features": [float(x) for x in X[i]]}
+                    fh.write(json.dumps(row) + "\n")
+    got = run_keyed_structured_stream(
+        spark, str(src), replace(CFG, n_total=400), str(tmp_path / "ck")
+    )
+    assert got["a"] == run_slide_loop(np.arange(1, 401), streams["a"], CFG)
+    det = make_slide_detector(CFG, 2)
+    for start in range(0, gap - gap % CFG.slide, CFG.slide):
+        det.process_batch(np.arange(start + 1, start + CFG.slide + 1),
+                          streams["b"][start : start + CFG.slide])
+    assert det._outliers
+    assert got["b"] == {
+        "outliers": sorted(det._outliers),
+        "n_only_inlier": None,
+        "n_only_outlier": None,
+        "n_both_inlier_outlier": None,
+    }
+
+
 def test_keyed_state_size_flat():
     """State-store blob size must be bounded by W x dim + pending — NOT
     grow with stream length (recorded outliers and per-batch diagnostics
